@@ -61,6 +61,81 @@ def test_incremental_equals_full_recompute(spark, v1_v2, tmp_path_factory):
     assert stats["n_docs"] == 60 - deleted + 8
 
 
+def test_pipeline_builds_no_frame_from_python_rows(spark, v1_v2, tmp_path_factory, monkeypatch):
+    """No stage commit turns driver-side Python rows into a DataFrame:
+    PySpark ships such a list through a Python worker, a hidden
+    parallelize that test_no_rdd_usage cannot see. The patch covers only
+    the pipeline calls; the fixture builds its corpus from rows."""
+    from pyspark.sql import SparkSession
+
+    c1, c2 = v1_v2
+    w1 = str(tmp_path_factory.mktemp("rows_v1"))
+    w2 = str(tmp_path_factory.mktemp("rows_v2"))
+    create = SparkSession.createDataFrame
+
+    def guarded(self, data, *args, **kwargs):
+        if isinstance(data, (list, tuple)):
+            raise AssertionError("createDataFrame on Python rows inside the pipeline")
+        return create(self, data, *args, **kwargs)
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", guarded)
+    run_pipeline(spark, c1, w1)
+    inc = run_pipeline_incremental(spark, c2, w2, prior_workdir=w1)
+    monkeypatch.undo()
+    assert inc["delta_stats"].count() == 1
+
+
+def _key_anti_join_counts(keys, prior):
+    """delta_stats as three separate counts: current keys, current keys
+    without a prior match, prior keys without a current match."""
+    on = ["doc_id", "sha256"]
+    return (
+        keys.count(),
+        keys.join(prior, on, "left_anti").count(),
+        prior.join(keys, on, "left_anti").count(),
+    )
+
+
+@pytest.mark.parametrize("registry", [True, False], ids=["scored_docs", "no_registry"])
+def test_delta_stats_match_key_anti_joins(spark, v1_v2, tmp_path_factory, registry):
+    """delta_stats keeps its schema (the bench reads it with pyarrow) and
+    equals the key anti-join counts — with a duplicated (doc_id, sha256)
+    row in the corpus, and against a prior run without the scored_docs
+    registry (prior keys then come from its mentions rows)."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from theta_spark.pipeline import read_stage, with_doc_id
+
+    c1, c2 = v1_v2
+    # the first brand-new doc twice: its key counts twice on the current side
+    again = spark.createDataFrame(corpus_rows(generate_corpus(68, seed=42)[60:61]), CORPUS_SCHEMA)
+    c2 = c2.unionByName(again)
+    w1 = str(tmp_path_factory.mktemp("ds_v1"))
+    w2 = str(tmp_path_factory.mktemp("ds_v2"))
+    run_pipeline(spark, c1, w1)
+    if registry:
+        prior = read_stage(spark, w1, "scored_docs")
+    else:
+        shutil.rmtree(os.path.join(w1, "scored_docs"))
+        prior = read_stage(spark, w1, "mentions").select("doc_id", "sha256").distinct()
+    want = _key_anti_join_counts(with_doc_id(c2).select("doc_id", "sha256"), prior)
+    inc = run_pipeline_incremental(spark, c2, w2, prior_workdir=w1)
+
+    assert inc["delta_stats"].schema.simpleString() == (
+        "struct<n_docs:bigint,n_extracted:bigint,n_retired:bigint>"
+    )
+    assert [tuple(r) for r in inc["delta_stats"].collect()] == [want]
+    assert want[0] == 60 - 5 + 8 + 1
+    table = pq.read_table(os.path.join(w2, "delta_stats"))
+    assert [(f.name, str(f.type)) for f in table.schema] == [
+        ("n_docs", "int64"), ("n_extracted", "int64"), ("n_retired", "int64")
+    ]
+    assert table.to_pylist() == [dict(zip(("n_docs", "n_extracted", "n_retired"), want))]
+
+
 def test_incremental_resume_reads_snapshots(spark, v1_v2, tmp_path_factory):
     """A resumed incremental run must trust its snapshots, not recompute:
     point prior_workdir at a bogus path — resume never touches it."""

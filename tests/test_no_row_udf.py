@@ -30,10 +30,11 @@ def test_no_rdd_usage():
 def test_no_collect_in_pipeline_hot_path():
     # driver-side collect loops defeat distribution; only queries.py (driver
     # contract scalar results) and canonicalize's fixpoint count may collect.
-    # ONE documented exception: pipeline.py's stage-lineage commit collects
-    # the per-output-FILE fingerprint rows (driver traffic is bounded by the
-    # file count, never row count) so the manifest+lineage commit is a
-    # single action — anything beyond that one site is a regression.
+    # ONE documented exception: pipeline.py's stage commit collects the
+    # per-output-FILE fingerprint rows (driver traffic is bounded by the
+    # file count, never row count) and writes the `_lineage` file and the
+    # manifest from them on the driver, with no further Spark job —
+    # anything beyond that one site is a regression.
     for name in ["operators/extract.py", "operators/merge.py",
                  "operators/triples.py", "operators/segmentation.py"]:
         src = (PKG / name).read_text()

@@ -80,6 +80,20 @@ def test_edge_provenance_carries_sha_invariant(spark, corpus50, docs50, tmp_path
     assert edges == dict(agg)
 
 
+LINEAGE_SCHEMA = "struct<file:string,rows_out:bigint,fingerprint:bigint>"
+
+
+def _fingerprint(df):
+    """The lineage row of each file of `df`: row count and the sum of the
+    rows' bounded xxhash64 over all columns."""
+    from pyspark.sql import functions as F
+
+    return df.groupBy(F.input_file_name().alias("file")).agg(
+        F.count(F.lit(1)).alias("rows_out"),
+        F.sum(F.pmod(F.xxhash64(*df.columns), F.lit(1_000_003))).alias("fingerprint"),
+    )
+
+
 def test_per_partition_lineage_and_audit(spark, tmp_path):
     """North rule: per-partition lineage + metrics. Each stage records one
     row per output file (rows, content fingerprint); audit_stage diffs a
@@ -99,9 +113,23 @@ def test_per_partition_lineage_and_audit(spark, tmp_path):
     assert all(r.fingerprint is not None for r in rows)
     assert audit_stage(spark, wd, "s1").count() == 0
 
+    # the _lineage format: one parquet file, a fixed schema, and rows equal
+    # to a fresh per-file re-fingerprint of the snapshot
+    assert lin.schema.simpleString() == LINEAGE_SCHEMA
+    assert os.listdir(os.path.join(wd, "s1", "_lineage")) == ["part-00000.parquet"]
+    fresh = _fingerprint(spark.read.parquet(os.path.join(wd, "s1"))).collect()
+    assert sorted(map(tuple, rows)) == sorted(map(tuple, fresh))
+
+    # a zero-row stage still records a readable, empty lineage table
+    run_checkpointed(spark, wd, "s0", lambda: spark.range(0).selectExpr("id AS x"))
+    empty = stage_lineage(spark, wd, "s0")
+    assert empty.schema.simpleString() == LINEAGE_SCHEMA
+    assert empty.count() == 0
+    assert os.listdir(os.path.join(wd, "s0", "_lineage")) == ["part-00000.parquet"]
+    assert audit_stage(spark, wd, "s0").count() == 0
+
     # corrupt one data file -> audit flags exactly the damaged partitions
     import glob
-    import os
 
     victim = sorted(glob.glob(os.path.join(wd, "s1", "part-*.parquet")))[0]
     os.remove(victim)
@@ -133,6 +161,11 @@ def test_empty_corpus_pipeline_and_resume(spark, tmp_path):
     assert resumed["edges"].count() == 0
     assert set(resumed["edges"].columns) == {"subj", "pred", "obj", "n_docs"}
     # lineage audit works on the empty partitioned snapshot too
-    from theta_spark.pipeline import audit_stage
+    from theta_spark.pipeline import audit_stage, run_pipeline_incremental
 
     assert audit_stage(spark, wd, "edges").count() == 0
+
+    # refreshing to an empty corpus retires both docs; the counts with no
+    # matching key are 0, not NULL
+    inc = run_pipeline_incremental(spark, corpus.limit(0), str(tmp_path / "wd2"), wd)
+    assert [tuple(r) for r in inc["delta_stats"].collect()] == [(0, 0, 2)]

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from theta_spark.operators.training import best_model_selection, epoch_val_metrics
@@ -234,3 +235,13 @@ def test_quality_lr_empty_input(spark):
 
     df = spark.createDataFrame([], "doc_id long, text string, n_chars long")
     assert train_quality_lr(df, iters=2).count() == 0
+
+
+def test_quality_lr_rejects_weights_past_exactness_bound(spark):
+    """A step size that throws the weights past |w| < 2e9 would make
+    w·x overflow exact i64 arithmetic: an error, even under python -O."""
+    from theta_spark.operators.training import train_quality_lr
+
+    _, df = _qdocs(spark)
+    with pytest.raises(ValueError, match="exactness bound"):
+        train_quality_lr(df, iters=2, lr_num=10**12)

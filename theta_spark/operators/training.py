@@ -244,7 +244,11 @@ def train_quality_lr(
     hist = []
     for it in range(iters + 1):
         # exactness: per-row |w.x| <= 4*|w|*QL_S must stay < 2^53
-        assert all(abs(wi) < 2 * 10**9 for wi in w), "weights out of exactness bound"
+        if not all(abs(wi) < 2 * 10**9 for wi in w):
+            raise ValueError(
+                f"weights {w} at iteration {it} are out of the i64 exactness bound "
+                "(|w| < 2e9); lower lr_num/lr_den"
+            )
         # weights ride as a BROADCAST 1-row frame, not literals: the
         # generated codegen source is then IDENTICAL across iterations
         # (only broadcast values differ), so whole-stage compilation is

@@ -21,6 +21,8 @@ import json
 import os
 import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -194,6 +196,11 @@ def build_nodes_edges(
 
 # ------------------------------------------------------------ lineage/resume
 
+_LINEAGE_SCHEMA = pa.schema(
+    [("file", pa.string()), ("rows_out", pa.int64()), ("fingerprint", pa.int64())]
+)
+
+
 def _manifest_path(workdir: str, stage: str) -> str:
     return os.path.join(workdir, stage, "_STAGE_MANIFEST.json")
 
@@ -241,13 +248,14 @@ def run_checkpointed(
     # can re-aggregate it to audit that the snapshot it is trusting still
     # fingerprints the same, per partition, without recomputing the stage.
     #
-    # ONE action commits the lineage: the per-file rows are collect()ed
-    # (one row per output file — driver traffic is bounded by the file
-    # count, not the data), the totals are summed in Python, and the tiny
-    # _lineage parquet is written from the driver-side rows. The former
-    # shape (lazy checkpoint + lineage write + totals agg) cost two extra
-    # driver round-trips per stage commit — measurable in the graph tail,
-    # where five commits run back-to-back on an otherwise idle cluster.
+    # The commit is one data write, one collect of the per-file rows
+    # (driver traffic is bounded by the file count, not the data), then
+    # driver-side writes of the `_lineage` parquet file and the manifest.
+    # The lineage file is written with pyarrow, not a Spark job: turning
+    # a Python row list into a DataFrame ships it through a Python worker,
+    # a ~1 s single-task job per commit for a table of a few rows. Both
+    # driver-side writes need the workdir to be a path the driver can
+    # open, as the manifest write always has.
     lineage_rows = (
         out.groupBy(F.input_file_name().alias("file"))
         .agg(
@@ -258,9 +266,14 @@ def run_checkpointed(
         )
         .collect()
     )
-    spark.createDataFrame(lineage_rows, "file string, rows_out long, fingerprint long").coalesce(
-        1
-    ).write.mode("overwrite").parquet(os.path.join(path, "_lineage"))
+    lineage_dir = os.path.join(path, "_lineage")
+    os.makedirs(lineage_dir, exist_ok=True)
+    pq.write_table(
+        pa.Table.from_pylist([r.asDict() for r in lineage_rows], schema=_LINEAGE_SCHEMA),
+        os.path.join(lineage_dir, "part-00000.parquet"),
+        store_schema=False,
+        write_statistics=False,
+    )
     if post_write is not None:
         # side tables (e.g. a delta stage's `_retired` doc keys) land
         # before the manifest: the manifest is the stage's commit marker,
@@ -711,17 +724,28 @@ def run_pipeline_incremental(
         return _keys().distinct()
 
     def _build_delta_stats():
-        prior_docs = _prior_all_keys("mentions")
-        keys = _keys()
-        return spark.createDataFrame(
-            [
-                (
-                    keys.count(),
-                    keys.join(prior_docs, ["doc_id", "sha256"], "left_anti").count(),
-                    prior_docs.join(keys, ["doc_id", "sha256"], "left_anti").count(),
-                )
-            ],
-            "n_docs long, n_extracted long, n_retired long",
+        # one lazy aggregate over the tagged union of current and prior
+        # keys, run by the stage's own write job: per key, how often it
+        # occurs on each side. A current row is extracted when its key has
+        # no prior occurrence, a prior row retired when its key has no
+        # current one — the counts of the two key anti-joins, without an
+        # action or a driver-side row list.
+        per_key = (
+            _keys().select("*", F.lit(1).alias("cur"), F.lit(0).alias("pri"))
+            .unionByName(
+                _prior_all_keys("mentions").select("*", F.lit(0).alias("cur"), F.lit(1).alias("pri"))
+            )
+            .groupBy("doc_id", "sha256")
+            .agg(F.sum("cur").alias("cur"), F.sum("pri").alias("pri"))
+        )
+
+        def total(c):  # 0, not NULL, when no row qualifies
+            return F.coalesce(F.sum(c), F.lit(0))
+
+        return per_key.agg(
+            total("cur").alias("n_docs"),
+            total(F.when(F.col("pri") == 0, F.col("cur"))).alias("n_extracted"),
+            total(F.when(F.col("cur") == 0, F.col("pri"))).alias("n_retired"),
         )
 
     graph = _commit_graph_layer(
