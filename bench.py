@@ -293,23 +293,11 @@ def run_bench(
                 )
                 return tm, m
             if skip_graph:
-                # same stage structure as run_pipeline's fused branch
-                # (mentions snapshot + fused extract_triples re-scoring the
-                # corpus), minus the nodes/edges graph stages
-                from theta_spark.pipeline import (
-                    extract_mentions_df,
-                    extract_triples,
-                    run_checkpointed,
-                )
+                # the same one-pass mentions + triples commits as
+                # run_pipeline, minus the nodes/edges graph stages
+                from theta_spark.pipeline import commit_extraction
 
-                mentions = run_checkpointed(
-                    spark, workdir, "mentions",
-                    lambda: extract_mentions_df(corpus, cfg), resume=False,
-                )
-                triples = run_checkpointed(
-                    spark, workdir, "triples",
-                    lambda: extract_triples(corpus, cfg), resume=False,
-                )
+                mentions, triples = commit_extraction(spark, corpus, workdir, cfg, resume=False)
                 stages = {"mentions": mentions, "triples": triples}
             else:
                 stages = run_pipeline(spark, corpus, workdir, cfg, resume=False)

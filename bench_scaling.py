@@ -305,8 +305,8 @@ adds threads on one already-busy die. The engine tracks the control
 bound, i.e. the plan itself has no scaling bottleneck at 32 threads.
 """
 
-    # preserve any hand-curated "### B-extended" evidence block (appended
-    # by repeated rerun_partb.py sessions) across regenerations
+    # preserve the hand-curated "### B-extended" evidence block (the
+    # archived round-2 part-B re-run results) across regenerations
     b_ext = ""
     if os.path.exists("BENCH.md"):
         cur = open("BENCH.md").read()

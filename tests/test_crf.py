@@ -90,20 +90,20 @@ def test_crf_spark_stage_differential(spark, corpus50, docs50):
     """decoder='crf' through the full fused Spark stage produces the same
     mention set as the default span decode — the M3/D1 differential."""
     from theta_spark.config import PipelineConfig
-    from theta_spark.operators.extract import extract_doc_mentions_df
-    from theta_spark.pipeline import with_doc_id
+    from theta_spark.operators.extract import extract_docs_df
+    from theta_spark.pipeline import doc_mentions, with_doc_id
 
     cfg = PipelineConfig()
     docs = with_doc_id(corpus50)
     span_rows = {
         tuple(r)
-        for r in extract_doc_mentions_df(docs, cfg.seg_len, cfg.seg_stride)
+        for r in doc_mentions(extract_docs_df(docs, cfg.seg_len, cfg.seg_stride))
         .select("doc_id", "category_id", "start", "end")
         .collect()
     }
     crf_rows = {
         tuple(r)
-        for r in extract_doc_mentions_df(docs, cfg.seg_len, cfg.seg_stride, decoder="crf")
+        for r in doc_mentions(extract_docs_df(docs, cfg.seg_len, cfg.seg_stride, decoder="crf"))
         .select("doc_id", "category_id", "start", "end")
         .collect()
     }

@@ -49,16 +49,46 @@ def test_triples_carry_sha256_invariant(spark, corpus50, docs50):
 
 
 def test_fused_equals_relational_assembly(spark, corpus50):
-    """The zero-shuffle fused per-doc triple path and the relational
-    window-assembly path must produce identical triple sets."""
-    from theta_spark.operators.triples import assemble_triples
+    """The fused per-doc stage and the relational operators (segment ->
+    score_and_decode -> unshift/dedup -> window assembly) must produce
+    identical mention and triple sets. A zero-yield document keeps its
+    per-doc row, with empty arrays, and projects to no mention or triple."""
+    from pyspark.sql import functions as F
 
-    fused = {tuple(r) for r in extract_triples(corpus50, PipelineConfig()).collect()}
-    rel = {
-        tuple(r)
-        for r in assemble_triples(extract_mentions_df(corpus50, PipelineConfig())).collect()
+    from theta_spark.corpus import CORPUS_SCHEMA
+    from theta_spark.operators.extract import score_and_decode
+    from theta_spark.operators.merge import dedup_mentions, unshift_mentions
+    from theta_spark.operators.segmentation import segment
+    from theta_spark.operators.triples import assemble_triples, with_category_names, with_norm
+    from theta_spark.pipeline import doc_mentions, doc_triples, extract_docs
+
+    cfg = PipelineConfig()
+    empty = spark.createDataFrame(
+        [("zy", "empty.py", "c0", "python", "# nothing to extract here\n")], CORPUS_SCHEMA
+    )
+    docs = with_doc_id(corpus50.unionByName(empty))
+    scored = extract_docs(docs, cfg)
+    zero_id = "zy:empty.py@c0"
+    zero = scored.where(F.col("doc_id") == zero_id).collect()
+    assert [(list(r.mentions), list(r.triples)) for r in zero] == [([], [])]
+    assert scored.count() == docs.count()
+
+    mentions, triples = doc_mentions(scored), doc_triples(scored)
+    assert mentions.where(F.col("doc_id") == zero_id).count() == 0
+    assert triples.where(F.col("doc_id") == zero_id).count() == 0
+
+    fused = {tuple(r) for r in triples.collect()}
+    assert fused == {tuple(r) for r in assemble_triples(mentions).collect()}
+
+    raw = score_and_decode(segment(docs, "text", cfg.seg_len, cfg.seg_stride), cfg.confidence)
+    rel_mentions = with_norm(with_category_names(dedup_mentions(unshift_mentions(raw))))
+    m_cols = ["doc_id", "category_id", "start", "end", "mention", "indent"]
+    assert {tuple(r) for r in rel_mentions.select(*m_cols).collect()} == {
+        tuple(r) for r in mentions.select(*m_cols).collect()
     }
-    assert fused == rel
+    assert {tuple(r) for r in assemble_triples(rel_mentions).collect()} == {
+        f[:4] for f in fused
+    }
 
 
 def test_engine_categories_cover_label_space(spark, corpus50):

@@ -210,8 +210,8 @@ def test_incremental_config_drift_fails_fast(spark, v1_v2, tmp_path_factory):
 
 
 def test_incremental_snapshots_are_delta_only(spark, v1_v2, tmp_path_factory):
-    """cfg.incremental_delta_only (default): the big row stages store ONLY
-    the delta extraction plus a `_retired` doc-key table; read_stage
+    """The big row stages of an incremental run store ONLY the delta
+    extraction plus a `_retired` doc-key table; read_stage
     resolves base − retired ∪ delta. The resolved views were proven equal
     to a full recompute above — here pin the WRITE volume: local files
     hold rows only for new/changed docs, and the audit still passes on
@@ -320,22 +320,6 @@ def test_incremental_chain_two_deltas(spark, v1_v2, tmp_path_factory):
         ("edges", ["subj", "pred", "obj", "n_docs"]),
     ]:
         assert _rowset(inc3[stage], cols) == _rowset(full[stage], cols), stage
-
-
-def test_incremental_full_rewrite_flag_off(spark, v1_v2, tmp_path_factory):
-    """incremental_delta_only=False keeps the legacy self-contained
-    snapshots: no delta_base in the manifest, rows for ALL current docs."""
-    from theta_spark.config import PipelineConfig
-    from theta_spark.pipeline import read_stage_local, run_pipeline_incremental, stage_manifest
-
-    c1, c2 = v1_v2
-    w1 = str(tmp_path_factory.mktemp("ff_v1"))
-    w2 = str(tmp_path_factory.mktemp("ff_v2"))
-    run_pipeline(spark, c1, w1)
-    cfg = PipelineConfig(incremental_delta_only=False)
-    inc = run_pipeline_incremental(spark, c2, w2, prior_workdir=w1, cfg=cfg)
-    assert "delta_base" not in stage_manifest(w2, "mentions")
-    assert read_stage_local(spark, w2, "mentions").count() == inc["mentions"].count()
 
 
 def test_rewrite_stage_full_flattens_chain(spark, v1_v2, tmp_path_factory):
@@ -476,3 +460,34 @@ def test_incremental_pre_config_snapshot_warns_and_old_fingerprint_migrates(
         run_pipeline_incremental(
             spark, c2, w5, prior_workdir=w3, cfg=PipelineConfig(confidence=0.5)
         )
+
+
+def test_each_document_scored_once(spark, v1_v2, tmp_path_factory, monkeypatch):
+    """One scoring pass per run: `mentions` and `triples` are projections
+    of a single fused per-doc mapInPandas, so a full run and an
+    incremental run each build exactly one scoring plan, and resuming a
+    complete workdir builds none."""
+    c1, c2 = v1_v2
+    # the concrete class: PySpark 4's classic DataFrame overrides the
+    # mapInPandas of the pyspark.sql.DataFrame base
+    frame_cls = type(c1)
+    scoring_calls = []
+    orig = frame_cls.mapInPandas
+
+    def recording(self, func, schema, *args, **kwargs):
+        if set(self.columns) == {"doc_id", "sha256", "text"}:
+            scoring_calls.append(schema)
+        return orig(self, func, schema, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "mapInPandas", recording)
+    w1 = str(tmp_path_factory.mktemp("once_v1"))
+    w2 = str(tmp_path_factory.mktemp("once_v2"))
+
+    run_pipeline(spark, c1, w1)
+    assert len(scoring_calls) == 1
+    scoring_calls.clear()
+    run_pipeline_incremental(spark, c2, w2, prior_workdir=w1)
+    assert len(scoring_calls) == 1
+    scoring_calls.clear()
+    run_pipeline(spark, c1, w1)  # resume: every stage is already committed
+    assert scoring_calls == []

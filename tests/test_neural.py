@@ -87,20 +87,20 @@ def test_mlp_through_spark_stage(spark, corpus50, mlp):
     — weights ride the closure like a broadcast checkpoint. Mention F1 vs
     the rule-scorer run of the same stage must stay high."""
     from theta_spark.config import PipelineConfig
-    from theta_spark.operators.extract import extract_doc_mentions_df
-    from theta_spark.pipeline import with_doc_id
+    from theta_spark.operators.extract import extract_docs_df
+    from theta_spark.pipeline import doc_mentions, with_doc_id
 
     cfg = PipelineConfig()
     docs = with_doc_id(corpus50)
     rule = {
         tuple(r)
-        for r in extract_doc_mentions_df(docs, cfg.seg_len, cfg.seg_stride)
+        for r in doc_mentions(extract_docs_df(docs, cfg.seg_len, cfg.seg_stride))
         .select("doc_id", "category_id", "start", "end")
         .collect()
     }
     neural = {
         tuple(r)
-        for r in extract_doc_mentions_df(docs, cfg.seg_len, cfg.seg_stride, scorer=mlp)
+        for r in doc_mentions(extract_docs_df(docs, cfg.seg_len, cfg.seg_stride, scorer=mlp))
         .select("doc_id", "category_id", "start", "end")
         .collect()
     }
@@ -119,8 +119,8 @@ def test_config_scorer_decoder_plumbing(spark, corpus50):
 
     from theta_spark.config import PipelineConfig
     from theta_spark.operators.neural import MLPScorer, default_mlp_scorer
-    from theta_spark.pipeline import _resolve_scorer, extract_mentions_df, with_doc_id
-    from theta_spark.operators.extract import extract_doc_mentions_df
+    from theta_spark.pipeline import _resolve_scorer, doc_mentions, extract_mentions_df, with_doc_id
+    from theta_spark.operators.extract import extract_docs_df
 
     assert _resolve_scorer(PipelineConfig()) is None
     assert isinstance(_resolve_scorer(PipelineConfig(scorer="mlp")), MLPScorer)
@@ -136,8 +136,10 @@ def test_config_scorer_decoder_plumbing(spark, corpus50):
     }
     explicit = {
         tuple(r)
-        for r in extract_doc_mentions_df(
-            with_doc_id(corpus50), cfg.seg_len, cfg.seg_stride, scorer=default_mlp_scorer()
+        for r in doc_mentions(
+            extract_docs_df(
+                with_doc_id(corpus50), cfg.seg_len, cfg.seg_stride, scorer=default_mlp_scorer()
+            )
         )
         .select("doc_id", "category_id", "start", "end")
         .collect()

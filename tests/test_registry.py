@@ -51,8 +51,8 @@ def test_loaded_model_plugs_into_fused_stage(spark, corpus50, tmp_path):
     reloaded, and run through the SAME fused mapInPandas stage produce the
     mentions of the in-memory scorer exactly."""
     from theta_spark.config import PipelineConfig
-    from theta_spark.operators.extract import extract_doc_mentions_df
-    from theta_spark.pipeline import with_doc_id
+    from theta_spark.operators.extract import extract_docs_df
+    from theta_spark.pipeline import doc_mentions, with_doc_id
 
     sc = _tiny_scorer()
     path = save_model(sc, str(tmp_path), "mlp")
@@ -63,7 +63,7 @@ def test_loaded_model_plugs_into_fused_stage(spark, corpus50, tmp_path):
     def run(s):
         return {
             tuple(r)
-            for r in extract_doc_mentions_df(docs, cfg.seg_len, cfg.seg_stride, scorer=s)
+            for r in doc_mentions(extract_docs_df(docs, cfg.seg_len, cfg.seg_stride, scorer=s))
             .select("doc_id", "category_id", "start", "end")
             .collect()
         }

@@ -5,6 +5,10 @@ Mirrors the reference's segmentation/decoding knobs:
   (reference: theta/nlp/tasks/task_ner.py:184-186,231)
 - confidence threshold for decode zeroing (task_ner.py:617-627, default 0.5
   at theta/__main__.py:115-116 — we default 0.0 like decode_ents' signature)
+
+There is no switch between physical extraction plans: every run scores
+each document once in the fused per-doc stage (operators/extract.py), and
+incremental runs always commit the row stages delta-only.
 """
 
 from __future__ import annotations
@@ -25,8 +29,6 @@ PREDICATES = ["defines", "imports", "calls", "contains", "instance_of"]
 class PipelineConfig:
     max_length: int = 128          # tokenizer max length (reference default shape)
     confidence: float = 0.0        # decode confidence threshold
-    fuse_doc_stage: bool = True    # fuse seg+score+decode+dedup per doc (no
-                                   # shuffle); False = relational seg-level path
     min_mention_len: int = 1
     # model head selection (M1-M5/M9): both scorers satisfy the same
     # seg_texts -> (start_probs, end_probs, offsets) contract and run
@@ -55,12 +57,6 @@ class PipelineConfig:
     jaccard_threshold: float = 0.9
     cc_max_iters: int = 20
     # scale knobs
-    incremental_delta_only: bool = True  # incremental runs write only delta
-                                   # rows + a retired-doc key table per big
-                                   # stage (manifest points at the base
-                                   # snapshot; read_stage resolves base −
-                                   # retired ∪ delta). False = full rewrite
-                                   # of every stage, the pre-r5 behavior.
     delta_max_chain: int = 8       # auto-flatten a delta stage back into a
                                    # self-contained snapshot once this many
                                    # incremental runs have chained (each

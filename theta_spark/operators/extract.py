@@ -1,11 +1,12 @@
-"""Fused tokenize+score+decode stage as a mapInPandas over segments.
+"""Fused segment+score+decode+dedup+assemble stage as one mapInPandas.
 
 This is the engine's single Python compute stage (SURVEY.md §2.14): one
-doc-segment row in -> N mention rows out, Arrow-batched, no per-row Spark
-UDFs. The heavy lifting per batch is numpy inside
-theta_spark.operators.scoring; a real transformer model slots in behind the
-same (seg_texts -> spans) contract (reference model heads M1-M9,
-theta/nlp/tasks/task_ner.py:348-445, theta/nlp/tasks/ner_models.py).
+document row in -> one row out carrying the document's mention and triple
+arrays (`extract_docs_df`), Arrow-batched, no per-row Spark UDFs. The
+heavy lifting per batch is numpy inside theta_spark.operators.scoring; a
+real transformer model slots in behind the same (seg_texts -> spans)
+contract (reference model heads M1-M9, theta/nlp/tasks/task_ner.py:348-445,
+theta/nlp/tasks/ner_models.py).
 """
 
 from __future__ import annotations
@@ -22,11 +23,6 @@ from theta_spark.operators.scoring import extract_mentions, extract_mentions_bat
 MENTION_RAW_SCHEMA = (
     "doc_id string, seg_id int, s_seg int, category_id int, "
     "start int, end int, mention string, indent int"
-)
-
-MENTION_DOC_SCHEMA = (
-    "doc_id string, sha256 string, category_id int, start int, end int, "
-    "mention string, indent int"
 )
 
 
@@ -59,90 +55,62 @@ def _batch_doc_mentions(texts, seg_len: int, seg_stride: int, confidence: float,
     return out
 
 
-def extract_doc_mentions_df(docs_df: DataFrame, seg_len: int, seg_stride: int, confidence: float = 0.0,
-                            scorer=None, decoder: str = "span", gp_max_span: int = 64) -> DataFrame:
+DOC_SCHEMA = (
+    "doc_id string, sha256 string, "
+    "mentions array<struct<category_id:int,start:int,end:int,mention:string,indent:int>>, "
+    "triples array<struct<subj:string,pred:string,obj:string>>"
+)
+
+
+def extract_docs_df(docs_df: DataFrame, seg_len: int, seg_stride: int, confidence: float = 0.0,
+                    scorer=None, decoder: str = "span", gp_max_span: int = 64) -> DataFrame:
     """Fused per-document stage: sliding-window segmentation + score +
-    decode + un-shift + order-preserving dedup in ONE mapInPandas — the
-    reference's per-guid dataflow (task_ner.py:183-233 segmentation,
-    594-654 decode, 1391-1415 merge/dedup) executed per Arrow batch.
+    decode + un-shift + order-preserving dedup + triple assembly in ONE
+    mapInPandas — the reference's per-guid dataflow (task_ner.py:183-233
+    segmentation, 594-654 decode, 1391-1415 merge/dedup) executed per
+    Arrow batch. One row per input document (DOC_SCHEMA): its deduped
+    mentions and its sorted, distinct triples; a zero-yield document keeps
+    its row with empty arrays.
 
     Why fuse: segmentation is a narrow fan-out, so all segments of a doc
     are born colocated; running dedup relationally forces a shuffle of the
     ~5x-expanded raw-mention stream that carries zero information (the
-    duplicates it removes are window-overlap artifacts local to one doc).
-    Fusing removes that shuffle entirely; the first wide exchange in the
-    pipeline is then the (much smaller) deduped doc-level mention stream
-    entering triple assembly. Bounded-size docs (source files) make the
-    per-doc unit safe; for unbounded docs use the relational
-    segment()+score_and_decode()+dedup path below.
+    duplicates it removes are window-overlap artifacts local to one doc),
+    and triples are a per-doc pure function of the doc's mention list, so
+    assembling them relationally adds a string-keyed window sort over the
+    whole mention stream. Here both come out of the same scoring pass;
+    `mentions` and `triples` are projections (inline) of this frame. The
+    relational segment()+score_and_decode()+dedup+assemble_triples
+    operators remain the operator-level contract it is tested equal to.
 
-    Also carries the per-row sha256(content) invariant (input_hint).
+    Carries the per-row sha256(content) invariant (input_hint).
 
     `scorer` (picklable; weights ride the task closure like a broadcast
     model checkpoint) and `decoder` ("span"/"crf") select the model and
     decode walk — see operators.scoring / operators.neural.
     """
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("doc_id", "sha256", "category_id", "start", "end", "mention", "indent")}
-            per_doc = _batch_doc_mentions(
-                list(pdf["text"]), seg_len, seg_stride, confidence, scorer, decoder, gp_max_span
-            )
-            for doc_id, sha, mentions in zip(pdf["doc_id"], pdf["sha256"], per_doc):
-                for m in mentions:
-                    out["doc_id"].append(doc_id)
-                    out["sha256"].append(sha)
-                    out["category_id"].append(m["category_id"])
-                    out["start"].append(m["start"])
-                    out["end"].append(m["end"])
-                    out["mention"].append(m["mention"])
-                    out["indent"].append(m["indent"])
-            yield pd.DataFrame(out)
-
-    return docs_df.select("doc_id", "sha256", "text").mapInPandas(run, MENTION_DOC_SCHEMA)
-
-
-TRIPLE_SCHEMA = "subj string, pred string, obj string, doc_id string, sha256 string"
-
-
-def extract_doc_triples_df(docs_df: DataFrame, seg_len: int, seg_stride: int, confidence: float = 0.0,
-                           scorer=None, decoder: str = "span", gp_max_span: int = 64) -> DataFrame:
-    """Fully-fused per-document triple extraction: segmentation + scoring +
-    decode + dedup + triple assembly in ONE narrow mapInPandas — the
-    reference's whole per-guid dataflow per Arrow batch, emitting
-    (subj, pred, obj, doc_id) directly.
-
-    Why: triples are a per-doc pure function of the doc's mention list, so
-    assembling them relationally forces a sort-based window shuffle of the
-    full mention stream keyed by a long string doc_id — measured to
-    saturate single-node memory bandwidth (scales to ~8 threads and then
-    flatlines), while this fused stage scales with cores like the scoring
-    stage (pure compute, zero shuffle; per-doc output is already
-    distinct). The relational assembly (operators.triples.assemble_triples)
-    remains the operator-level contract and is differentially tested equal.
-
-    Carries the per-row sha256(content) invariant (input_hint) end-to-end:
-    every emitted triple row keeps its source document's content hash.
-    """
     from theta_spark.reference_impl import assemble_doc_triples
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = {k: [] for k in ("subj", "pred", "obj", "doc_id", "sha256")}
+            doc_ids = list(pdf["doc_id"])
             per_doc = _batch_doc_mentions(
                 list(pdf["text"]), seg_len, seg_stride, confidence, scorer, decoder, gp_max_span
             )
-            for doc_id, sha, mentions in zip(pdf["doc_id"], pdf["sha256"], per_doc):
-                for (s, p, o, d) in sorted(assemble_doc_triples(mentions, doc_id)):
-                    out["subj"].append(s)
-                    out["pred"].append(p)
-                    out["obj"].append(o)
-                    out["doc_id"].append(d)
-                    out["sha256"].append(sha)
-            yield pd.DataFrame(out)
+            yield pd.DataFrame({
+                "doc_id": doc_ids,
+                "sha256": list(pdf["sha256"]),
+                "mentions": [
+                    [(m["category_id"], m["start"], m["end"], m["mention"], m["indent"]) for m in ms]
+                    for ms in per_doc
+                ],
+                "triples": [
+                    sorted((s, p, o) for s, p, o, _ in assemble_doc_triples(ms, doc_id))
+                    for doc_id, ms in zip(doc_ids, per_doc)
+                ],
+            })
 
-    return docs_df.select("doc_id", "sha256", "text").mapInPandas(run, TRIPLE_SCHEMA)
+    return docs_df.select("doc_id", "sha256", "text").mapInPandas(run, DOC_SCHEMA)
 
 
 MRC_SCHEMA = (

@@ -2,21 +2,26 @@
 
     corpus(repo, path, commit, lang, content)
       -> doc_id + sha256 invariant                       [narrow]
-      -> sliding-window segments (W1)                    [narrow fan-out]
-      -> mapInPandas score+decode (M*/D1 fused)          [Arrow batches]
-      -> un-shift + dedup (G1/G2)                        [shuffle]
-      -> triples via windows + joins                     [shuffle]
+      -> one fused mapInPandas per document: segment     [Arrow batches]
+         (W1) + score + decode (M*/D1) + un-shift/dedup
+         (G1/G2) + triple assembly -> (doc_id, sha256,
+         mentions[], triples[]), materialized once
+      -> mentions, triples = inline projections          [narrow]
       -> canonicalization (LSH + CC) on entity names     [small table]
       -> nodes/edges materialization (salted agg)        [shuffle]
 
+Every document is scored exactly once per run: the `mentions` and
+`triples` stages are both projections of the same per-document frame.
 Per-row invariant: sha256(content) via F.sha2 carried from the scan into the
-mentions output (input_hint contract). Every stage is a checkpointable
-parquet snapshot via `run_checkpointed` with per-stage lineage + metrics
-(north rule: resumable with per-partition lineage and metrics tables).
+mentions and triples outputs (input_hint contract). Every stage is a
+checkpointable parquet snapshot via `run_checkpointed` with per-stage
+lineage + metrics (north rule: resumable with per-partition lineage and
+metrics tables).
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
@@ -28,14 +33,8 @@ from pyspark.sql import functions as F
 
 from theta_spark.canonicalize import canonicalize_names
 from theta_spark.config import PipelineConfig
-from theta_spark.operators.extract import (
-    extract_doc_mentions_df,
-    extract_doc_triples_df,
-    score_and_decode,
-)
-from theta_spark.operators.merge import dedup_mentions, unshift_mentions
-from theta_spark.operators.segmentation import segment
-from theta_spark.operators.triples import assemble_triples, with_category_names, with_norm
+from theta_spark.operators.extract import extract_docs_df
+from theta_spark.operators.triples import with_category_names, with_norm
 
 
 def with_doc_id(corpus: DataFrame) -> DataFrame:
@@ -73,40 +72,38 @@ def _resolve_scorer(cfg: PipelineConfig):
     return None
 
 
-def extract_mentions_df(corpus: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
-    """corpus -> deduped document-level mentions with category names + norms.
-
-    Default path fuses segmentation+score+decode+dedup per doc in one
-    narrow mapInPandas stage (zero shuffles before triple assembly); set
-    cfg.fuse_doc_stage=False for the relational segment-level path (for
-    unbounded-size documents where per-doc processing could skew).
-    cfg.scorer/cfg.decoder select the model head (M1 rule/MLP) and decode
-    (D1 span / M3 CRF-Viterbi) run inside the same stage."""
+def extract_docs(docs: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
+    """Keyed docs (with_doc_id output) -> one row per document: (doc_id,
+    sha256, mentions[], triples[]), from ONE fused scoring pass
+    (operators.extract.extract_docs_df). cfg.scorer/cfg.decoder select the
+    model head (M1 rule/MLP) and decode (D1 span / M3 CRF-Viterbi /
+    GlobalPointer) run inside the stage."""
     cfg = cfg or PipelineConfig()
-    docs = with_doc_id(corpus)
-    if cfg.fuse_doc_stage:
-        mentions = extract_doc_mentions_df(
-            docs, cfg.seg_len, cfg.seg_stride, cfg.confidence,
-            scorer=_resolve_scorer(cfg), decoder=cfg.decoder, gp_max_span=cfg.gp_max_span,
-        )
-    else:
-        segs = segment(docs, "text", cfg.seg_len, cfg.seg_stride)
-        raw = score_and_decode(segs, cfg.confidence)
-        mentions = dedup_mentions(unshift_mentions(raw))
-    return with_norm(with_category_names(mentions))
+    return extract_docs_df(
+        docs, cfg.seg_len, cfg.seg_stride, cfg.confidence,
+        scorer=_resolve_scorer(cfg), decoder=cfg.decoder, gp_max_span=cfg.gp_max_span,
+    )
+
+
+def doc_mentions(scored: DataFrame) -> DataFrame:
+    """Per-doc frame -> deduped document-level mentions with category
+    names + norms; a zero-yield document contributes no row."""
+    return with_norm(with_category_names(scored.select("doc_id", "sha256", F.inline("mentions"))))
+
+
+def doc_triples(scored: DataFrame) -> DataFrame:
+    """Per-doc frame -> triples(subj, pred, obj, doc_id, sha256)."""
+    return scored.select(F.inline("triples"), "doc_id", "sha256")
+
+
+def extract_mentions_df(corpus: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
+    """corpus -> deduped document-level mentions with category names + norms."""
+    return doc_mentions(extract_docs(with_doc_id(corpus), cfg))
 
 
 def extract_triples(corpus: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
-    """corpus -> triples(subj, pred, obj, doc_id). Default: fully-fused
-    per-doc stage (zero shuffles; scales with cores). Relational path
-    (mentions -> window assembly) when fuse_doc_stage=False."""
-    cfg = cfg or PipelineConfig()
-    if cfg.fuse_doc_stage:
-        return extract_doc_triples_df(
-            with_doc_id(corpus), cfg.seg_len, cfg.seg_stride, cfg.confidence,
-            scorer=_resolve_scorer(cfg), decoder=cfg.decoder, gp_max_span=cfg.gp_max_span,
-        )
-    return assemble_triples(extract_mentions_df(corpus, cfg))
+    """corpus -> triples(subj, pred, obj, doc_id, sha256)."""
+    return doc_triples(extract_docs(with_doc_id(corpus), cfg))
 
 
 def compute_canon_map(mentions: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -428,10 +425,10 @@ def stage_manifest(workdir: str, stage: str) -> dict:
 # config fields that determine the ROWS of the mentions/triples stages.
 # Deliberately excluded (ADVICE r4): graph-layer knobs (shingle_k,
 # minhash_rows, lsh_bands, jaccard_threshold, cc_max_iters) and physical
-# knobs (fuse_doc_stage — both paths are differentially tested
-# row-identical — shuffle_partitions, salt_buckets, hot_key_threshold):
-# changing those leaves prior mention/triple rows valid, so an incremental
-# merge against them must NOT be rejected as config drift.
+# knobs (delta_max_chain, shuffle_partitions, salt_buckets,
+# hot_key_threshold): changing those leaves prior mention/triple rows
+# valid, so an incremental merge against them must NOT be rejected as
+# config drift.
 _EXTRACTION_CFG_FIELDS = (
     "max_length", "confidence", "min_mention_len",
     "scorer", "decoder", "gp_max_span", "labels",
@@ -630,24 +627,16 @@ def run_pipeline_incremental(
     if stage_complete(prior_workdir, "scored_docs"):
         prior_keys = read_stage(spark, prior_workdir, "scored_docs")
 
-    def _delta_corpus(prior_stage: DataFrame):
-        reused, delta_docs = corpus_delta(docs, prior_stage, prior_keys=prior_keys)
-        delta = delta_docs.select(
-            "repo", "path", "commit", "lang", F.col("text").alias("content")
-        )
-        return reused, delta
-
-    # delta-only commits (cfg.incremental_delta_only, default): the big
-    # row stages write ONLY the delta extraction + a retired-doc key
-    # table; unchanged docs' rows resolve from the prior snapshot by
-    # reference (read_stage). Write volume becomes delta-proportional —
-    # the point of an incremental run at 10^12-file scale, where a full
-    # rewrite of byte-identical rows dwarfs the actual work. The legacy
-    # full-rewrite path is kept behind the flag (self-contained snapshots,
-    # no base dependency at read time).
+    # delta-only commits: the big row stages write ONLY the delta
+    # extraction + a retired-doc key table; unchanged docs' rows resolve
+    # from the prior snapshot by reference (read_stage). Write volume is
+    # delta-proportional — the point of an incremental run at 10^12-file
+    # scale, where a full rewrite of byte-identical rows dwarfs the actual
+    # work. A stage is flattened back into a self-contained snapshot once
+    # its chain reaches cfg.delta_max_chain (or on demand with
+    # rewrite_stage_full).
     import threading
 
-    delta_only = cfg.incremental_delta_only
     _memo: dict = {}
     _memo_lock = threading.Lock()
 
@@ -663,62 +652,37 @@ def run_pipeline_incremental(
                 _memo["keys"] = docs.select("doc_id", "sha256").localCheckpoint(eager=True)
             return _memo["keys"]
 
-    def _prior_all_keys(stage: str) -> DataFrame:
+    def _prior_all_keys() -> DataFrame:
         if prior_keys is not None:
             return prior_keys.select("doc_id", "sha256")
-        return read_stage(spark, prior_workdir, stage).select("doc_id", "sha256").distinct()
+        return read_stage(spark, prior_workdir, "mentions").select("doc_id", "sha256").distinct()
 
     def _retired_docs():
         # prior docs no longer byte-identical in the current corpus
         # (changed sha or deleted): their base rows must not resolve
-        return _prior_all_keys("mentions").join(
-            _keys(), ["doc_id", "sha256"], "left_anti"
-        ).select("doc_id")
+        return _prior_all_keys().join(_keys(), ["doc_id", "sha256"], "left_anti").select("doc_id")
 
     def _delta_doc_ids():
-        return _keys().join(
-            _prior_all_keys("mentions"), ["doc_id", "sha256"], "left_anti"
-        ).select("doc_id")
+        return _keys().join(_prior_all_keys(), ["doc_id", "sha256"], "left_anti").select("doc_id")
 
-    def _build_mentions_delta():
-        _, delta = _delta_corpus(read_stage(spark, prior_workdir, "mentions"))
-        return extract_mentions_df(delta, cfg)
+    @functools.cache
+    def _delta_scored() -> DataFrame:
+        # the delta docs scored ONCE, when the first of the two row stages
+        # builds; both commit projections of it
+        _, delta_docs = corpus_delta(
+            docs, read_stage(spark, prior_workdir, "mentions"), prior_keys=prior_keys
+        )
+        return extract_docs(delta_docs, cfg).localCheckpoint(eager=True)
 
-    def _build_mentions():
-        reused, delta = _delta_corpus(read_stage(spark, prior_workdir, "mentions"))
-        return extract_mentions_df(delta, cfg).unionByName(reused)
-
-    if delta_only:
-        mentions = run_checkpointed_delta(
-            spark, workdir, "mentions", _build_mentions_delta, _retired_docs,
+    def commit(stage: str, project) -> DataFrame:
+        return run_checkpointed_delta(
+            spark, workdir, stage, lambda: project(_delta_scored()), _retired_docs,
             prior_workdir, resume=resume, extra_manifest={"config": cfg_fp},
             max_chain=cfg.delta_max_chain,
         )
-    else:
-        mentions = run_checkpointed(
-            spark, workdir, "mentions", _build_mentions, resume=resume,
-            extra_manifest={"config": cfg_fp},
-        )
 
-    def _build_triples_delta():
-        _, delta = _delta_corpus(read_stage(spark, prior_workdir, "triples"))
-        return extract_triples(delta, cfg)
-
-    def _build_triples():
-        reused, delta = _delta_corpus(read_stage(spark, prior_workdir, "triples"))
-        return extract_triples(delta, cfg).unionByName(reused)
-
-    if delta_only:
-        triples = run_checkpointed_delta(
-            spark, workdir, "triples", _build_triples_delta, _retired_docs,
-            prior_workdir, resume=resume, extra_manifest={"config": cfg_fp},
-            max_chain=cfg.delta_max_chain,
-        )
-    else:
-        triples = run_checkpointed(
-            spark, workdir, "triples", _build_triples, resume=resume,
-            extra_manifest={"config": cfg_fp},
-        )
+    mentions = commit("mentions", doc_mentions)
+    triples = commit("triples", doc_triples)
 
     def _build_scored_docs():
         return _keys().distinct()
@@ -733,7 +697,7 @@ def run_pipeline_incremental(
         per_key = (
             _keys().select("*", F.lit(1).alias("cur"), F.lit(0).alias("pri"))
             .unionByName(
-                _prior_all_keys("mentions").select("*", F.lit(0).alias("cur"), F.lit(1).alias("pri"))
+                _prior_all_keys().select("*", F.lit(0).alias("cur"), F.lit(1).alias("pri"))
             )
             .groupBy("doc_id", "sha256")
             .agg(F.sum("cur").alias("cur"), F.sum("pri").alias("pri"))
@@ -754,9 +718,9 @@ def run_pipeline_incremental(
             ("scored_docs", _build_scored_docs, None),
             ("delta_stats", _build_delta_stats, None),
         ],
-        delta_base=prior_workdir if delta_only else None,
-        retired_docs_build=_retired_docs if delta_only else None,
-        delta_doc_ids_build=_delta_doc_ids if delta_only else None,
+        delta_base=prior_workdir,
+        retired_docs_build=_retired_docs,
+        delta_doc_ids_build=_delta_doc_ids,
     )
     return {"mentions": mentions, "triples": triples, **graph}
 
@@ -840,14 +804,8 @@ def _commit_graph_layer(
             F.col("pred"), F.pmod(F.xxhash64("doc_id"), F.lit(16))
         ).sortWithinPartitions("pred", "subj", "obj")
 
-    prov_delta_mode = (
-        delta_base is not None
-        and cfg.incremental_delta_only
-        and retired_docs_build is not None
-        and delta_doc_ids_build is not None
-        and stage_complete(delta_base, "canon_map")
-    )
-    if delta_base is not None and not prov_delta_mode and cfg.incremental_delta_only:
+    prov_delta_mode = delta_base is not None and stage_complete(delta_base, "canon_map")
+    if delta_base is not None and not prov_delta_mode:
         import warnings
 
         warnings.warn(
@@ -970,27 +928,31 @@ def _commit_graph_layer(
     return result
 
 
+def commit_extraction(
+    spark: SparkSession, corpus: DataFrame, workdir: str, cfg: PipelineConfig, resume: bool = True
+):
+    """Commit the `mentions` and `triples` stages of a full run as
+    projections of ONE per-document scoring pass. The pass is materialized
+    when the first of the two builders runs, so a resumed run that already
+    has both snapshots scores nothing. Returns (mentions, triples)."""
+    cfg_fp = _cfg_fingerprint(cfg)
+    scored = functools.cache(
+        lambda: extract_docs(with_doc_id(corpus), cfg).localCheckpoint(eager=True)
+    )
+
+    def commit(stage: str, project) -> DataFrame:
+        return run_checkpointed(
+            spark, workdir, stage, lambda: project(scored()), resume=resume,
+            extra_manifest={"config": cfg_fp},
+        )
+
+    return commit("mentions", doc_mentions), commit("triples", doc_triples)
+
+
 def run_pipeline(spark: SparkSession, corpus: DataFrame, workdir: str, cfg: PipelineConfig | None = None, resume: bool = True):
     """Full checkpoint-resumable run; returns dict of stage DataFrames."""
     cfg = cfg or PipelineConfig()
-    cfg_fp = _cfg_fingerprint(cfg)
-    mentions = run_checkpointed(
-        spark, workdir, "mentions", lambda: extract_mentions_df(corpus, cfg), resume=resume,
-        extra_manifest={"config": cfg_fp},
-    )
-
-    def _build_triples():
-        if cfg.fuse_doc_stage:
-            # fused per-doc path: re-scores the corpus (narrow, scales with
-            # cores) instead of shuffling the 20x-larger mention stream
-            # through a string-keyed window sort
-            return extract_triples(corpus, cfg)
-        return assemble_triples(mentions)
-
-    triples = run_checkpointed(
-        spark, workdir, "triples", _build_triples, resume=resume,
-        extra_manifest={"config": cfg_fp},
-    )
+    mentions, triples = commit_extraction(spark, corpus, workdir, cfg, resume)
 
     # scored-docs registry: every (doc_id, sha256) this run scored —
     # INCLUDING zero-yield docs, which row-bearing stages cannot witness.

@@ -25,8 +25,7 @@ from theta_spark.streaming.stateful import (  # noqa: F401 - re-export
 )
 
 from theta_spark.config import PipelineConfig
-from theta_spark.operators.triples import assemble_triples
-from theta_spark.pipeline import extract_mentions_df
+from theta_spark.pipeline import doc_mentions, doc_triples, extract_docs, with_doc_id
 
 
 def process_corpus_batch(
@@ -38,13 +37,12 @@ def process_corpus_batch(
     and the checkpoint commit) overwrites its own directory instead of
     appending duplicates — this is what makes the sink idempotent; a blind
     mode('append') would be at-least-once. Readers see `epoch` as a
-    discovered partition column under `out_dir`/mentions|triples."""
-    cfg = cfg or PipelineConfig()
-    mentions = extract_mentions_df(batch_df, cfg)
-    mentions.write.mode("overwrite").parquet(f"{out_dir}/mentions/epoch={epoch_id}")
-    assemble_triples(mentions).write.mode("overwrite").parquet(
-        f"{out_dir}/triples/epoch={epoch_id}"
-    )
+    discovered partition column under `out_dir`/mentions|triples. Each
+    document is scored once: both outputs are projections of one
+    materialized per-doc frame."""
+    scored = extract_docs(with_doc_id(batch_df), cfg).localCheckpoint(eager=True)
+    doc_mentions(scored).write.mode("overwrite").parquet(f"{out_dir}/mentions/epoch={epoch_id}")
+    doc_triples(scored).write.mode("overwrite").parquet(f"{out_dir}/triples/epoch={epoch_id}")
 
 
 def attach_stream(corpus_stream: DataFrame, out_dir: str, checkpoint_dir: str, cfg: PipelineConfig | None = None):

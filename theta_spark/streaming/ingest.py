@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from theta_spark.config import PipelineConfig
-from theta_spark.pipeline import extract_mentions_df, extract_triples, with_doc_id
+from theta_spark.pipeline import doc_mentions, doc_triples, extract_docs, with_doc_id
 
 STAGES = ("mentions", "triples", "scored_docs")
 HLL_B = 8  # stream-cardinality sketch precision (m=256 registers/epoch)
@@ -124,26 +124,17 @@ def process_corpus_batch_incremental(
                                       cannot witness (same reasoning as
                                       pipeline.py's scored_docs stage).
     """
-    cfg = cfg or PipelineConfig()
     spark = batch_df.sparkSession
     docs = with_doc_id(batch_df)
     prior = _prior_registry(spark, out_dir, epoch_id)
     if prior is not None:
         docs = docs.join(prior, ["doc_id", "sha256"], "left_anti")
-    delta = docs.select("repo", "path", "commit", "lang", F.col("text").alias("content"))
-    # one materialization: mentions, triples and the registry all derive
-    # from the (small) delta corpus; without the cut each writer would
-    # re-run the anti-join + doc_id derivation
-    delta = delta.localCheckpoint(eager=True)
-    extract_mentions_df(delta, cfg).write.mode("overwrite").parquet(
-        f"{out_dir}/mentions/epoch={epoch_id}"
-    )
-    extract_triples(delta, cfg).write.mode("overwrite").parquet(
-        f"{out_dir}/triples/epoch={epoch_id}"
-    )
-    keyed = with_doc_id(delta).select("doc_id", "sha256").distinct().localCheckpoint(
-        eager=True
-    )
+    # one materialization: the delta docs are scored once, and mentions,
+    # triples and the registry are all projections of that per-doc frame
+    scored = extract_docs(docs, cfg).localCheckpoint(eager=True)
+    doc_mentions(scored).write.mode("overwrite").parquet(f"{out_dir}/mentions/epoch={epoch_id}")
+    doc_triples(scored).write.mode("overwrite").parquet(f"{out_dir}/triples/epoch={epoch_id}")
+    keyed = scored.select("doc_id", "sha256").distinct()
     keyed.write.mode("overwrite").parquet(f"{out_dir}/scored_docs/epoch={epoch_id}")
     # stream-cardinality sketch: HLL registers over this epoch's NEW
     # content versions — O(2^b) rows per epoch, max-merged at read time
