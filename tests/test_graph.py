@@ -278,20 +278,28 @@ def test_checkpoint_every_is_bit_identical_and_truncates_plan(spark, edges_df):
     """checkpoint_every bounds lineage (plan becomes a scan of cached
     partitions past each interval) without changing a single bit — the
     i64 / integer-count arithmetic is partitioning-invariant, so the
-    materialize points are unobservable in the result."""
+    materialize points are unobservable in the result. Uniform,
+    personalized and warm-started PageRank share one loop; each is pinned."""
     from theta_spark.functions.graph import coreness, label_propagation
 
-    plain = pagerank(edges_df, iters=9)
-    ckpt = pagerank(edges_df, iters=9, checkpoint_every=3)
-    assert sorted(map(tuple, ckpt.select("node", "rank_s").collect())) == sorted(
-        map(tuple, plain.select("node", "rank_s").collect())
+    seeds = spark.createDataFrame([(0,), (7,), (23,)], "node: long")
+    old_edges = [(u, v) for u, v in EDGES if (u + v) % 5 != 0]
+    init = spark.createDataFrame(
+        sorted(_py_pagerank(old_edges, iters=3).items()), "node: long, rank_s: long"
     )
-    # the checkpointed variant's plan is rooted in the cached RDD (the
-    # last interval's materialize), not the full 9-round join chain
-    ckpt_plan = ckpt._jdf.queryExecution().optimizedPlan().toString()
-    plain_plan = plain._jdf.queryExecution().optimizedPlan().toString()
-    assert "LogicalRDD" in ckpt_plan
-    assert len(ckpt_plan) < len(plain_plan)
+    # an uncut round doubles the plan, so the added modes stop at 6 rounds
+    for iters, mode in ((9, {}), (6, {"seeds": seeds}), (6, {"init_ranks": init})):
+        plain = pagerank(edges_df, iters=iters, **mode)
+        ckpt = pagerank(edges_df, iters=iters, checkpoint_every=3, **mode)
+        assert sorted(map(tuple, ckpt.select("node", "rank_s").collect())) == sorted(
+            map(tuple, plain.select("node", "rank_s").collect())
+        ), mode
+        # the checkpointed variant's plan is rooted in the cached RDD (the
+        # last interval's materialize), not the full join chain
+        ckpt_plan = ckpt._jdf.queryExecution().optimizedPlan().toString()
+        plain_plan = plain._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" in ckpt_plan, mode
+        assert len(ckpt_plan) < len(plain_plan), mode
 
     assert sorted(map(tuple, coreness(edges_df, rounds=8, checkpoint_every=2).collect())) == sorted(
         map(tuple, coreness(edges_df, rounds=8).collect())
@@ -299,6 +307,73 @@ def test_checkpoint_every_is_bit_identical_and_truncates_plan(spark, edges_df):
     assert sorted(
         map(tuple, label_propagation(edges_df, steps=6, checkpoint_every=2).collect())
     ) == sorted(map(tuple, label_propagation(edges_df, steps=6).collect()))
+
+
+class _CountingFrame:
+    """Stands in for a DataFrame in `fixed_rounds`: records the round at
+    which each localCheckpoint happens."""
+
+    def __init__(self, rounds_seen, cuts):
+        self.rounds_seen, self.cuts = rounds_seen, cuts
+
+    def localCheckpoint(self, eager):
+        assert eager
+        self.cuts.append(self.rounds_seen[-1])
+        return self
+
+
+@pytest.mark.parametrize(
+    "rounds, k, cut_at",
+    [(9, 3, [3, 6]), (10, 3, [3, 6, 9]), (9, None, []), (9, 0, []), (1, 1, []), (0, 2, [])],
+)
+def test_fixed_rounds_cut_schedule(rounds, k, cut_at):
+    """Round numbers run 1..rounds; every state element is cut after each
+    round divisible by k except the last; None and 0 never cut."""
+    from theta_spark.functions.graph import fixed_rounds
+
+    seen, cuts_a, cuts_b = [], [], []
+    state = (_CountingFrame(seen, cuts_a), _CountingFrame(seen, cuts_b))
+
+    def step(st, r):
+        seen.append(r)
+        return st
+
+    assert fixed_rounds(state, step, rounds, k) == state
+    assert seen == list(range(1, rounds + 1))
+    assert cuts_a == cut_at and cuts_b == cut_at
+
+
+def test_checkpoint_tails_at_40_rounds_match_replicas(spark, edges_df):
+    """40 rounds: k=3 ends on an uncut 1-round tail, k=4 on a 4-round one
+    (the last round is never cut); both reproduce the Python replicas.
+    k stays small because an uncut interval of k rounds holds 2^k copies
+    of the PageRank plan."""
+    from theta_spark.functions.graph import label_propagation
+
+    seeds = spark.createDataFrame([(0,), (7,), (23,)], "node: long")
+    want_pr = _py_pagerank(EDGES, iters=40)
+    want_ppr = _py_ppr(EDGES, [0, 7, 23], iters=40)
+    lpa = []
+    for k in (3, 4):
+        pr = pagerank(edges_df, iters=40, checkpoint_every=k)
+        assert {r["node"]: r["rank_s"] for r in pr.collect()} == want_pr, k
+        ppr = pagerank(edges_df, iters=40, seeds=seeds, checkpoint_every=k)
+        assert {r["node"]: r["rank_s"] for r in ppr.collect()} == want_ppr, k
+        lpa.append(
+            sorted(map(tuple, label_propagation(edges_df, steps=40, checkpoint_every=k).collect()))
+        )
+    assert lpa[0] == lpa[1]
+
+
+def test_uniform_pagerank_is_ppr_seeded_with_every_node(spark):
+    """Uniform PageRank is the seeded recurrence with every node a seed,
+    dangling share included: sinks 40 and 41 have no out-edges."""
+    from theta_spark.functions.graph import graph_nodes
+
+    e = spark.createDataFrame(EDGES + [(0, 40), (5, 41)], "src: long, dst: long")
+    uniform = pagerank(e, iters=4)
+    seeded = pagerank(e, iters=4, seeds=graph_nodes(e))
+    assert sorted(map(tuple, uniform.collect())) == sorted(map(tuple, seeded.collect()))
 
 
 def _py_ppr(edges, seed_nodes, iters=4, damping=85):

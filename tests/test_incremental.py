@@ -424,8 +424,8 @@ def test_incremental_pre_config_snapshot_warns_and_old_fingerprint_migrates(
     import json as _json
     import warnings
 
-    from theta_spark.config import PipelineConfig
-    from theta_spark.pipeline import _manifest_path, stage_manifest
+    from theta_spark.config import NER_LABELS, PipelineConfig
+    from theta_spark.pipeline import _cfg_fingerprint, _manifest_path, stage_manifest
 
     c1, c2 = v1_v2
 
@@ -441,25 +441,36 @@ def test_incremental_pre_config_snapshot_warns_and_old_fingerprint_migrates(
     with pytest.warns(UserWarning, match="predates config recording"):
         run_pipeline_incremental(spark, c2, w2, prior_workdir=w1)
 
-    # (b) rewrite the fingerprint in the OLD full-config format
+    # (b) rewrite the fingerprint in the OLD full-config format, then in
+    # the extraction-fields format that still recorded the since-removed
+    # config fields (min_mention_len, labels)
     w3 = str(tmp_path_factory.mktemp("fullcfg_v1"))
     run_pipeline(spark, c1, w3)
     full_fp = _json.dumps(
         dataclasses.asdict(PipelineConfig()), sort_keys=True, default=str
     )
-    for st in ("mentions", "triples"):
-        m = stage_manifest(w3, st)
-        m["config"] = full_fp
-        with open(_manifest_path(w3, st), "w") as f:
-            _json.dump(m, f)
-    w4 = str(tmp_path_factory.mktemp("fullcfg_v2"))
-    run_pipeline_incremental(spark, c2, w4, prior_workdir=w3)  # accepted
+    removed_fp = _json.dumps(
+        {
+            **_json.loads(_cfg_fingerprint(PipelineConfig())),
+            "min_mention_len": 1,
+            "labels": list(NER_LABELS),
+        },
+        sort_keys=True,
+    )
+    for old_fp in (full_fp, removed_fp):
+        for st in ("mentions", "triples"):
+            m = stage_manifest(w3, st)
+            m["config"] = old_fp
+            with open(_manifest_path(w3, st), "w") as f:
+                _json.dump(m, f)
+        w4 = str(tmp_path_factory.mktemp("fullcfg_v2"))
+        run_pipeline_incremental(spark, c2, w4, prior_workdir=w3)  # accepted
 
-    w5 = str(tmp_path_factory.mktemp("fullcfg_v2_drift"))
-    with pytest.raises(ValueError, match="config does not match"):
-        run_pipeline_incremental(
-            spark, c2, w5, prior_workdir=w3, cfg=PipelineConfig(confidence=0.5)
-        )
+        w5 = str(tmp_path_factory.mktemp("fullcfg_v2_drift"))
+        with pytest.raises(ValueError, match="config does not match"):
+            run_pipeline_incremental(
+                spark, c2, w5, prior_workdir=w3, cfg=PipelineConfig(confidence=0.5)
+            )
 
 
 def test_each_document_scored_once(spark, v1_v2, tmp_path_factory, monkeypatch):

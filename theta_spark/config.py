@@ -13,7 +13,7 @@ incremental runs always commit the row stages delta-only.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 # 1-based category ids; 0 reserved = "no entity"
@@ -29,7 +29,6 @@ PREDICATES = ["defines", "imports", "calls", "contains", "instance_of"]
 class PipelineConfig:
     max_length: int = 128          # tokenizer max length (reference default shape)
     confidence: float = 0.0        # decode confidence threshold
-    min_mention_len: int = 1
     # model head selection (M1-M5/M9): both scorers satisfy the same
     # seg_texts -> (start_probs, end_probs, offsets) contract and run
     # through the identical fused mapInPandas stage; both decoders walk
@@ -62,9 +61,7 @@ class PipelineConfig:
                                    # incremental runs have chained (each
                                    # link costs read_stage one anti-join);
                                    # the Iceberg compaction-policy twin.
-    shuffle_partitions: int = 32
     salt_buckets: int = 8          # salting for skewed canonical entities
-    hot_key_threshold: int = 10_000
 
     @property
     def seg_len(self) -> int:
@@ -75,5 +72,3 @@ class PipelineConfig:
     def seg_stride(self) -> int:
         # reference: task_ner.py:185 (seg_stride = int(seg_len / 2))
         return self.seg_len // 2
-
-    labels: list = field(default_factory=lambda: list(NER_LABELS))

@@ -59,6 +59,20 @@ def graph_nodes(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFra
     )
 
 
+def fixed_rounds(state: tuple, step, rounds: int, checkpoint_every: int | None) -> tuple:
+    """`state = step(state, r)` for r = 1..rounds over a tuple of DataFrames.
+
+    With `checkpoint_every=k` (None or 0: never) every element is eagerly
+    localCheckpointed after each round r with r % k == 0 and r < rounds,
+    so lineage spans at most k rounds. Every caller's arithmetic is
+    partitioning-invariant, so the cuts cannot change a bit of a result."""
+    for r in range(1, rounds + 1):
+        state = step(state, r)
+        if checkpoint_every and r % checkpoint_every == 0 and r < rounds:
+            state = tuple(df.localCheckpoint(eager=True) for df in state)
+    return state
+
+
 def pagerank(
     edges: DataFrame,
     iters: int = 4,
@@ -82,14 +96,14 @@ def pagerank(
     `rank_s` is the exact invariant the oracle matches. Total mass stays
     ≤ SCALE (floor-division leaks stay in the floors, never duplicate).
 
-    The loop below builds ONE lazy plan of depth `iters` (no action per
-    iteration). For deep iteration counts pass `checkpoint_every=k`:
-    every k rounds the rank frame is eagerly localCheckpointed, cutting
-    the logical plan to a scan of the cached partitions — Catalyst
-    analysis cost and lineage depth stay O(k) instead of O(iters) — at
-    the price of one job per interval (the GraphX-style materialize).
-    The i64 arithmetic is partitioning-invariant, so checkpointing
-    cannot change a bit of the result (pytest-pinned).
+    The loop (`fixed_rounds`) builds ONE lazy plan, no action per round.
+    Every round reads the ranks twice (contributions and dangling mass),
+    so k uncut rounds hold 2^k copies of the plan before them. Past a
+    few rounds pass a SMALL `checkpoint_every=k` (2-4; at iters=40 on a
+    40-node graph, local[4], k=3 took 18 s and k=8 took 52 s): every k
+    rounds the ranks are eagerly localCheckpointed, one job per interval
+    (the GraphX-style materialize). The i64 arithmetic is partitioning-
+    invariant, so the cuts cannot change a bit of the result (pinned).
 
     `init_ranks` (node, rank_s) warm-starts the iteration — the
     INCREMENTAL path: after the pipeline merges an edge delta, reuse the
@@ -130,6 +144,11 @@ def pagerank(
         "node", F.coalesce("out_deg", F.lit(0)).cast("long").alias("out_deg")
     ).localCheckpoint(eager=False)
 
+    # the modes differ only in the start vector, the teleport term and the
+    # share of the dangling mass; uniform and warm start keep `base` for both
+    teleport = str(((100 - damping_pct) * base) // 100)
+    dangling = f"(dm div {n_nodes})"
+    r0 = F.lit(base)
     if seeds is not None:
         ndeg = ndeg.join(
             seeds.select("node").distinct().withColumn("is_seed", F.lit(1)),
@@ -142,60 +161,27 @@ def pagerank(
         if n_seeds == 0:
             raise ValueError("pagerank: no seed node is present in the graph")
         seed_base = SCALE // n_seeds
-        ranks = ndeg.select(
-            "node", "out_deg", "is_seed",
-            F.when(F.col("is_seed") == 1, F.lit(seed_base))
-            .otherwise(F.lit(0)).cast("long").alias("r"),
+        teleport = (
+            f"(CASE WHEN is_seed = 1 THEN {((100 - damping_pct) * seed_base) // 100} ELSE 0 END)"
         )
-        seed_teleport = ((100 - damping_pct) * seed_base) // 100
-        for _i in range(iters):
-            contrib = (
-                e.join(ranks.filter(F.col("out_deg") > 0), e[src] == F.col("node"))
-                .select(F.col(dst).alias("node"), F.expr("r div out_deg").alias("c"))
-                .groupBy("node")
-                .agg(F.sum("c").alias("s"))
-            )
-            dang = ranks.filter(F.col("out_deg") == 0).agg(
-                F.coalesce(F.sum("r"), F.lit(0)).cast("long").alias("dm")
-            )
-            ranks = (
-                ndeg.join(contrib, "node", "left")
-                .crossJoin(F.broadcast(dang))
-                .select(
-                    "node",
-                    "out_deg",
-                    "is_seed",
-                    F.expr(
-                        f"CAST((CASE WHEN is_seed = 1 THEN {seed_teleport} ELSE 0 END)"
-                        f" + (({damping_pct} * (coalesce(s, 0)"
-                        f" + (CASE WHEN is_seed = 1 THEN dm div {n_seeds} ELSE 0 END)))"
-                        f" div 100) AS BIGINT)"
-                    ).alias("r"),
-                )
-            )
-            if checkpoint_every and (_i + 1) % checkpoint_every == 0 and (_i + 1) < iters:
-                ranks = ranks.localCheckpoint(eager=True)
-        return ranks.select(
-            "node",
-            F.col("r").alias("rank_s"),
-            (F.col("r") / F.lit(float(SCALE))).alias("rank"),
-        )
-
+        dangling = f"(CASE WHEN is_seed = 1 THEN dm div {n_seeds} ELSE 0 END)"
+        r0 = F.when(F.col("is_seed") == 1, F.lit(seed_base)).otherwise(F.lit(0))
+    start = ndeg
     if init_ranks is not None:
         # warm start: prior rank where known, uniform base for new nodes
-        ranks = ndeg.join(
+        start = ndeg.join(
             init_ranks.select("node", F.col("rank_s").alias("r0")), "node", "left"
-        ).select(
-            "node", "out_deg",
-            F.coalesce("r0", F.lit(base)).cast("long").alias("r"),
         )
-    else:
-        ranks = ndeg.select("node", "out_deg", F.lit(base).cast("long").alias("r"))
-    teleport = ((100 - damping_pct) * base) // 100
-    for _i in range(iters):
-        # `div` is Spark's exact integral division — a double `/` +
-        # cast(long) can truncate one off near quotient boundaries, which
-        # would break bit-equality with the integer-arithmetic oracle
+        r0 = F.coalesce("r0", F.lit(base))
+    # `div` is Spark's exact integral division — a double `/` + cast(long)
+    # can truncate one off near quotient boundaries, which would break
+    # bit-equality with the integer-arithmetic oracle
+    new_rank = (
+        f"CAST({teleport} + (({damping_pct} * (coalesce(s, 0) + {dangling})) div 100) AS BIGINT)"
+    )
+
+    def step(state, _r):
+        (ranks,) = state
         contrib = (
             e.join(ranks.filter(F.col("out_deg") > 0), e[src] == F.col("node"))
             .select(F.col(dst).alias("node"), F.expr("r div out_deg").alias("c"))
@@ -207,20 +193,14 @@ def pagerank(
         dang = ranks.filter(F.col("out_deg") == 0).agg(
             F.coalesce(F.sum("r"), F.lit(0)).cast("long").alias("dm")
         )
-        ranks = (
+        return (
             ndeg.join(contrib, "node", "left")
             .crossJoin(F.broadcast(dang))
-            .select(
-                "node",
-                "out_deg",
-                F.expr(
-                    f"CAST({teleport} + (({damping_pct} * (coalesce(s, 0)"
-                    f" + (dm div {n_nodes}))) div 100) AS BIGINT)"
-                ).alias("r"),
-            )
+            .select(*ndeg.columns, F.expr(new_rank).alias("r")),
         )
-        if checkpoint_every and (_i + 1) % checkpoint_every == 0 and (_i + 1) < iters:
-            ranks = ranks.localCheckpoint(eager=True)
+
+    ranks = start.select(*ndeg.columns, r0.cast("long").alias("r"))
+    (ranks,) = fixed_rounds((ranks,), step, iters, checkpoint_every)
     return ranks.select(
         "node",
         F.col("r").alias("rank_s"),
@@ -243,6 +223,13 @@ def _degrees(und: DataFrame) -> DataFrame:
         .unionByName(und.select(F.col("b").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("deg"))
+    )
+
+
+def _adjacency(und: DataFrame) -> DataFrame:
+    """(node, nbr) in both directions over the undirected a<b edge set."""
+    return und.select(F.col("a").alias("node"), F.col("b").alias("nbr")).unionByName(
+        und.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
     )
 
 
@@ -389,25 +376,23 @@ def coreness(
     degree and non-increasing. Deep `rounds` → pass `checkpoint_every`
     (same bounded-lineage materialize as pagerank; the H-index is
     partitioning-invariant so the result is bit-identical)."""
-    from pyspark.sql import Window
-
     und = undirected_edges(edges, src, dst)
-    adj = und.select(F.col("a").alias("node"), F.col("b").alias("nbr")).unionByName(
-        und.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
-    )
-    c = _degrees(und).withColumnRenamed("deg", "core")
+    adj = _adjacency(und)
     w = Window.partitionBy("node").orderBy(F.desc("c_nbr"))
-    for _i in range(rounds):
+
+    def step(state, _r):
+        (c,) = state
         nb = adj.join(
             c.select(F.col("node").alias("nbr"), F.col("core").alias("c_nbr")), "nbr"
         ).select("node", "c_nbr")
-        c = (
+        return (
             nb.withColumn("rn", F.row_number().over(w))
             .groupBy("node")
-            .agg(F.max(F.least(F.col("rn"), F.col("c_nbr"))).alias("core"))
+            .agg(F.max(F.least(F.col("rn"), F.col("c_nbr"))).alias("core")),
         )
-        if checkpoint_every and (_i + 1) % checkpoint_every == 0 and (_i + 1) < rounds:
-            c = c.localCheckpoint(eager=True)
+
+    c = _degrees(und).withColumnRenamed("deg", "core")
+    (c,) = fixed_rounds((c,), step, rounds, checkpoint_every)
     return c
 
 
@@ -435,27 +420,24 @@ def label_propagation(
     node ids, never grow. Deep `steps` → pass `checkpoint_every` (same
     bounded-lineage materialize as pagerank; counts + total tie order
     are partitioning-invariant so the result is bit-identical)."""
-    und = undirected_edges(edges, src, dst)
-    adj = und.select(F.col("a").alias("node"), F.col("b").alias("nbr")).unionByName(
-        und.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
-    )
-    labels = graph_nodes(edges, src, dst).withColumn("label", F.col("node"))
-    from pyspark.sql import Window
-
+    adj = _adjacency(undirected_edges(edges, src, dst))
     w = Window.partitionBy("node").orderBy(F.desc("n"), F.asc("label"))
-    for _i in range(steps):
+
+    def step(state, _r):
+        (labels,) = state
         cnt = (
             adj.join(labels.withColumnRenamed("node", "nbr"), "nbr")
             .groupBy("node", "label")
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        labels = (
+        return (
             cnt.withColumn("rk", F.row_number().over(w))
             .filter(F.col("rk") == 1)
-            .select("node", "label")
+            .select("node", "label"),
         )
-        if checkpoint_every and (_i + 1) % checkpoint_every == 0 and (_i + 1) < steps:
-            labels = labels.localCheckpoint(eager=True)
+
+    labels = graph_nodes(edges, src, dst).withColumn("label", F.col("node"))
+    (labels,) = fixed_rounds((labels,), step, steps, checkpoint_every)
     return labels
 
 
@@ -490,9 +472,7 @@ def link_prediction(
     partition heads, no global sort shuffle).
     """
     und = undirected_edges(edges, src, dst)
-    nbr = und.select(F.col("a").alias("node"), F.col("b").alias("nbr")).unionByName(
-        und.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
-    )
+    nbr = _adjacency(und)
     deg = nbr.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
     n1 = nbr.select(F.col("node").alias("a"), F.col("nbr").alias("w"))
     n2 = nbr.select(F.col("node").alias("b"), F.col("nbr").alias("w"))
@@ -546,8 +526,10 @@ def bfs_distances(
     against edges on src, then a min-groupBy union with the settled set.
     Work per round is O(frontier-adjacent edges), not O(V); hub fan-out
     lands on the groupBy's partial (map-side) aggregation and AQE
-    skew-split. Deep `rounds` → `checkpoint_every` bounds lineage the
-    same way pagerank/coreness do (bit-unobservable: the arithmetic is
+    skew-split. Each round reads the previous round's result twice (the
+    min-union and, through the frontier, the join), so like pagerank an
+    uncut interval of k rounds holds 2^k plan copies: for deep `rounds`
+    pass a small `checkpoint_every` (bit-unobservable: the arithmetic is
     partitioning-invariant)."""
     # id-type-agnostic like every other op here: node ids join on their
     # own type (the KG's ids are STRINGS — a long cast would null them
@@ -555,9 +537,10 @@ def bfs_distances(
     dist = seeds.select(F.col("node").alias("node")).distinct().withColumn(
         "dist", F.lit(0).cast("int")
     )
-    frontier = dist
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    for r in range(1, rounds + 1):
+
+    def step(state, r):
+        dist, frontier = state
         reached = (
             frontier.join(e, frontier["node"] == e["src"])
             .select(F.col("dst").alias("node"), F.lit(r).cast("int").alias("dist"))
@@ -569,11 +552,9 @@ def bfs_distances(
             .agg(F.min("dist").alias("dist"))
         )
         # next frontier = nodes settled exactly this round
-        frontier = nxt.filter(F.col("dist") == r)
-        dist = nxt
-        if checkpoint_every and r % checkpoint_every == 0 and r < rounds:
-            dist = dist.localCheckpoint(eager=True)
-            frontier = frontier.localCheckpoint(eager=True)
+        return nxt, nxt.filter(F.col("dist") == r)
+
+    dist, _ = fixed_rounds((dist, dist), step, rounds, checkpoint_every)
     return dist
 
 
@@ -629,9 +610,9 @@ def hits(
             f"profile (max_in={prof.mi}, max_out={prof.mo}); reduce iters"
         )
 
-    h = nodes.select("node", F.lit(1).cast("long").alias("v"))
-    a = None
-    for i in range(1, iters + 1):
+    def step(state, _r):
+        # a round's authorities come from the previous hubs only
+        _, h = state
         a = (
             e.join(h, e[src] == h["node"])
             .select(F.col(dst).alias("node"), F.col("v"))
@@ -644,9 +625,10 @@ def hits(
             .groupBy("node")
             .agg(F.sum("v").cast("long").alias("v"))
         )
-        if checkpoint_every and i % checkpoint_every == 0 and i < iters:
-            a = a.localCheckpoint(eager=True)
-            h = h.localCheckpoint(eager=True)
+        return a, h
+
+    h = nodes.select("node", F.lit(1).cast("long").alias("v"))
+    a, h = fixed_rounds((None, h), step, iters, checkpoint_every)
 
     out = (
         nodes.join(a.withColumnRenamed("v", "auth_s"), "node", "left")

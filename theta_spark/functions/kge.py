@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from theta_spark.functions.graph import fixed_rounds
 
 # the package's ONE replayable-randomness kernel (shared with the
 # sampling/augment side so the draw format can never desynchronize)
@@ -173,12 +174,10 @@ def train_transe(
     integer arithmetic is partitioning-invariant, so materialize points
     are bit-unobservable (pinned by test). 0 disables (tiny epoch counts
     only)."""
-    for e in range(1, epochs + 1):
-        ent, rel = transe_epoch(ent, rel, triples, lr=lr, margin=margin)
-        if checkpoint_every and e % checkpoint_every == 0 and e < epochs:
-            ent = ent.localCheckpoint(eager=True)
-            rel = rel.localCheckpoint(eager=True)
-    return ent, rel
+    def epoch(state, _e):
+        return transe_epoch(*state, triples, lr=lr, margin=margin)
+
+    return fixed_rounds((ent, rel), epoch, epochs, checkpoint_every)
 
 
 def violation_count(

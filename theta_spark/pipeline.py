@@ -425,13 +425,11 @@ def stage_manifest(workdir: str, stage: str) -> dict:
 # config fields that determine the ROWS of the mentions/triples stages.
 # Deliberately excluded (ADVICE r4): graph-layer knobs (shingle_k,
 # minhash_rows, lsh_bands, jaccard_threshold, cc_max_iters) and physical
-# knobs (delta_max_chain, shuffle_partitions, salt_buckets,
-# hot_key_threshold): changing those leaves prior mention/triple rows
-# valid, so an incremental merge against them must NOT be rejected as
-# config drift.
+# knobs (delta_max_chain, salt_buckets): changing those leaves prior
+# mention/triple rows valid, so an incremental merge against them must NOT
+# be rejected as config drift.
 _EXTRACTION_CFG_FIELDS = (
-    "max_length", "confidence", "min_mention_len",
-    "scorer", "decoder", "gp_max_span", "labels",
+    "max_length", "confidence", "scorer", "decoder", "gp_max_span",
 )
 
 

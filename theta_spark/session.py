@@ -12,6 +12,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _quarter_of_memtotal() -> str:
+    with open("/proc/meminfo") as f:
+        mem_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{max(1024, mem_kb // 4096)}m"
+
+
 def get_spark(
     app_name: str = "theta-spark",
     master: str | None = None,
@@ -45,8 +51,11 @@ def get_spark(
         # local mode: the driver JVM IS the executor — size the heap for
         # task-count × (window sort + shuffle + parquet writer) buffers, or
         # high-core runs thrash GC and scale NEGATIVELY (measured: triples
-        # stage 48s at local[8] vs 69s at local[32] under an 8g heap)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # stage 48s at local[8] vs 69s at local[32] under an 8g heap).
+        # Default: a quarter of the host's memory, which may be shared
+        .config(
+            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _quarter_of_memtotal()
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
