@@ -295,9 +295,11 @@ def run_bench(
             if skip_graph:
                 # the same one-pass mentions + triples commits as
                 # run_pipeline, minus the nodes/edges graph stages
-                from theta_spark.pipeline import commit_extraction
+                from theta_spark.pipeline import Increment
 
-                mentions, triples = commit_extraction(spark, corpus, workdir, cfg, resume=False)
+                mentions, triples = Increment(
+                    spark, corpus, workdir, None, cfg, resume=False
+                ).commit_extraction()
                 stages = {"mentions": mentions, "triples": triples}
             else:
                 stages = run_pipeline(spark, corpus, workdir, cfg, resume=False)
@@ -317,7 +319,7 @@ def run_bench(
             # decomposes into its stage commits so a regression is isolable
             # per stage without re-running. nodes/edge_provenance/
             # scored_docs commit concurrently (pipeline._commit_graph_layer)
-            # — their walls overlap, so the tail ~= max(batch) + edges.
+            # — their walls overlap, so the tail ~= max(batch).
             m["stage_walls"] = {st: round(_stage_wall(workdir, st), 3) for st in stages}
             m.update(
                 n_docs=n_docs,

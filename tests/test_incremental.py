@@ -238,12 +238,18 @@ def test_incremental_snapshots_are_delta_only(spark, v1_v2, tmp_path_factory):
         assert not (local_keys & prior_keys)
         assert audit_stage(spark, w2, stage).count() == 0
 
-    # the provenance snapshot is delta-only too, manifest points at base
+    # the provenance snapshot and the scored-docs registry are delta-only
+    # too, manifest points at base
     from theta_spark.pipeline import stage_manifest
 
-    for stage in ("mentions", "triples", "edge_provenance"):
+    for stage in ("mentions", "triples", "edge_provenance", "scored_docs"):
         assert stage_manifest(w2, stage)["delta_base"] == w1
     assert audit_stage(spark, w2, "edge_provenance").count() == 0
+
+    # the registry's local rows are exactly the new and changed keys
+    local_reg = {tuple(r) for r in read_stage_local(spark, w2, "scored_docs").collect()}
+    assert local_reg and local_reg == _rowset(inc["scored_docs"], ["doc_id", "sha256"]) - prior_keys
+    assert audit_stage(spark, w2, "scored_docs").count() == 0
 
 
 def test_incremental_canon_merge_rewrites_affected_unchanged_doc(spark, tmp_path_factory):
@@ -295,31 +301,80 @@ def test_incremental_canon_merge_rewrites_affected_unchanged_doc(spark, tmp_path
     assert m_local == {y_id}
 
 
-def test_incremental_chain_two_deltas(spark, v1_v2, tmp_path_factory):
-    """Chained incrementals: v3 = v2 + one new doc, run off the DELTA-ONLY
-    v2 snapshot — read_stage must resolve a two-link base chain and still
-    equal a full recompute."""
+def test_refresh_keeps_unchanged_version_of_doc_id(spark, tmp_path_factory):
+    """A doc_id with two content versions loses one: the refresh retires
+    the doc_id, so it must re-extract the version that did not change,
+    or the doc resolves to no rows at all. Delta accounting stays in key
+    counts: the removed key is retired, nothing new is extracted."""
+    rows = corpus_rows(generate_corpus(12, seed=3))
+    repo, path, commit, lang, content = rows[0]
+    second = (repo, path, commit, lang, content + "\n# second version\n")
+    c1 = spark.createDataFrame(rows + [second], CORPUS_SCHEMA).repartition(2)
+    c2 = spark.createDataFrame(rows, CORPUS_SCHEMA).repartition(2)
+    w1, w2, wf = (str(tmp_path_factory.mktemp(f"ver_{n}")) for n in ("v1", "v2", "full"))
+    run_pipeline(spark, c1, w1)
+    inc = run_pipeline_incremental(spark, c2, w2, prior_workdir=w1)
+    full = run_pipeline(spark, c2, wf)
+
+    doc0 = f"{repo}:{path}@{commit}"
+    assert inc["triples"].where(F.col("doc_id") == doc0).count() > 0
+    for stage, cols in [
+        ("mentions", ["doc_id", "sha256", "category", "start", "end", "mention"]),
+        ("triples", ["subj", "pred", "obj", "doc_id", "sha256"]),
+        ("edge_provenance", ["subj", "pred", "obj", "doc_id", "sha256"]),
+        ("scored_docs", ["doc_id", "sha256"]),
+    ]:
+        assert _rowset(inc[stage], cols) == _rowset(full[stage], cols), stage
+    assert [tuple(r) for r in inc["delta_stats"].collect()] == [(12, 0, 1)]
+
+
+def test_refresh_needs_prior_canon_map(spark, v1_v2, tmp_path_factory):
+    """A delta edge_provenance is diffed against the prior run's
+    canon_map: a prior without that stage is refused, by name."""
+    import os
+    import shutil
+
+    c1, c2 = v1_v2
+    w1 = str(tmp_path_factory.mktemp("nocanon_v1"))
+    w2 = str(tmp_path_factory.mktemp("nocanon_v2"))
+    run_pipeline(spark, c1, w1)
+    shutil.rmtree(os.path.join(w1, "canon_map"))
+    with pytest.raises(ValueError, match="no canon_map stage"):
+        run_pipeline_incremental(spark, c2, w2, prior_workdir=w1)
+
+
+def test_incremental_chain_three_refreshes(spark, v1_v2, tmp_path_factory):
+    """Chained refreshes: v3 = v2 + one new doc, v4 = v3 with one doc
+    changed and one deleted, each run off the previous DELTA-ONLY run —
+    read_stage must resolve a three-link base chain, and every resolved
+    stage must still equal a full recompute."""
     from theta_spark.pipeline import run_pipeline_incremental
 
     c1, c2 = v1_v2
     new_doc = ("chain", "z.py", "c3", "python", "def chained_fn(a):\n    return a\n")
     v3 = [tuple(r) for r in c2.collect()] + [new_doc]
-    c3 = spark.createDataFrame(v3, CORPUS_SCHEMA).repartition(4)
-    w1 = str(tmp_path_factory.mktemp("ch_v1"))
-    w2 = str(tmp_path_factory.mktemp("ch_v2"))
-    w3 = str(tmp_path_factory.mktemp("ch_v3"))
-    wf = str(tmp_path_factory.mktemp("ch_full"))
+    v4 = [
+        (repo, path, commit, lang, content + "\n# third edit\n") if i == 1 else (repo, path, commit, lang, content)
+        for i, (repo, path, commit, lang, content) in enumerate(v3)
+        if i != 2
+    ]
+    w1, w2, w3, w4, wf = (str(tmp_path_factory.mktemp(f"ch_{n}")) for n in ("v1", "v2", "v3", "v4", "full"))
     run_pipeline(spark, c1, w1)
     run_pipeline_incremental(spark, c2, w2, prior_workdir=w1)
-    inc3 = run_pipeline_incremental(spark, c3, w3, prior_workdir=w2)
-    full = run_pipeline(spark, c3, wf)
+    run_pipeline_incremental(spark, spark.createDataFrame(v3, CORPUS_SCHEMA).repartition(4), w3, prior_workdir=w2)
+    c4 = spark.createDataFrame(v4, CORPUS_SCHEMA).repartition(4)
+    inc4 = run_pipeline_incremental(spark, c4, w4, prior_workdir=w3)
+    full = run_pipeline(spark, c4, wf)
     for stage, cols in [
         ("mentions", ["doc_id", "sha256", "category", "start", "end", "mention"]),
         ("triples", ["subj", "pred", "obj", "doc_id", "sha256"]),
         ("edge_provenance", ["subj", "pred", "obj", "doc_id", "sha256"]),
         ("edges", ["subj", "pred", "obj", "n_docs"]),
+        ("scored_docs", ["doc_id", "sha256"]),
+        ("nodes", ["canonical", "category", "n_mentions", "n_doc_parts"]),
+        ("canon_map", ["name", "canonical"]),
     ]:
-        assert _rowset(inc3[stage], cols) == _rowset(full[stage], cols), stage
+        assert _rowset(inc4[stage], cols) == _rowset(full[stage], cols), stage
 
 
 def test_rewrite_stage_full_flattens_chain(spark, v1_v2, tmp_path_factory):

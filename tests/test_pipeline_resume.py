@@ -58,6 +58,21 @@ def test_edges_aggregate_hot_entity(spark, corpus50, tmp_path):
     assert hot, "hot entity shared_util must appear as a call target"
 
 
+def _assert_provenance_audits(stages, sha_by_id):
+    """Every edge_provenance row's sha256 equals sha256(content) of its
+    source document, and the edges table is exactly the provenance
+    aggregation (same keys, same doc counts)."""
+    from collections import Counter
+
+    prov = stages["edge_provenance"].collect()
+    assert prov
+    for row in prov:
+        assert row.sha256 == sha_by_id[row.doc_id], row
+    agg = Counter((p.subj, p.pred, p.obj) for p in prov)
+    edges = {(e.subj, e.pred, e.obj): e.n_docs for e in stages["edges"].collect()}
+    assert edges == dict(agg)
+
+
 def test_edge_provenance_carries_sha_invariant(spark, corpus50, docs50, tmp_path):
     """The graph layer keeps the input_hint sha256 invariant: every
     edge_provenance row's sha256 equals sha256(content) of its source
@@ -68,16 +83,40 @@ def test_edge_provenance_carries_sha_invariant(spark, corpus50, docs50, tmp_path
     wd = str(tmp_path / "run3")
     r = run_pipeline(spark, corpus50, wd)
     sha_by_id = {d.doc_id: hashlib.sha256(d.content.encode()).hexdigest() for d in docs50}
-    prov = r["edge_provenance"].collect()
-    assert prov
-    for row in prov:
-        assert row.sha256 == sha_by_id[row.doc_id], row
-    # edges == groupBy of provenance (same keys, same doc counts)
-    from collections import Counter
+    _assert_provenance_audits(r, sha_by_id)
 
-    agg = Counter((p.subj, p.pred, p.obj) for p in prov)
-    edges = {(e.subj, e.pred, e.obj): e.n_docs for e in r["edges"].collect()}
-    assert edges == dict(agg)
+
+def test_refresh_edge_provenance_audits(spark, docs50, tmp_path):
+    """The same audit on a refresh, whose edge_provenance resolves as
+    base − retired ∪ delta while edges aggregates the canonical triple
+    stream: with changed, deleted and new docs, and a new doc whose name
+    merges an unchanged doc's entity cluster (re-keying its base rows)."""
+    import hashlib
+
+    from theta_spark.corpus import CORPUS_SCHEMA, corpus_rows
+    from theta_spark.pipeline import run_pipeline_incremental
+
+    x_doc = ("cm", "x.py", "c1", "python",
+             "class GammaHolder:\n    def gamma_delta_utils(self):\n        return 1\n")
+    y_doc = ("cm", "y.py", "c1", "python",
+             "class GammaKeeper:\n    def gamma_delta_util(self):\n        return 2\n")
+    rows = corpus_rows(docs50)
+    v1 = [x_doc] + rows[:40]
+    v2 = [x_doc, y_doc] + rows[40:] + [
+        (repo, path, commit, lang, content + "\n# edit\n") if i % 5 == 0 else (repo, path, commit, lang, content)
+        for i, (repo, path, commit, lang, content) in enumerate(rows[:40])
+        if i % 9 != 1
+    ]
+    w1, w2 = str(tmp_path / "v1"), str(tmp_path / "v2")
+    run_pipeline(spark, spark.createDataFrame(v1, CORPUS_SCHEMA), w1)
+    r = run_pipeline_incremental(spark, spark.createDataFrame(v2, CORPUS_SCHEMA), w2, w1)
+    sha_by_id = {
+        f"{repo}:{path}@{commit}": hashlib.sha256(content.encode()).hexdigest()
+        for repo, path, commit, _, content in v2
+    }
+    _assert_provenance_audits(r, sha_by_id)
+    x_rows = r["edge_provenance"].where("doc_id = 'cm:x.py@c1'").collect()
+    assert "gamma_delta_util" in {name for p in x_rows for name in (p.subj, p.obj)}
 
 
 LINEAGE_SCHEMA = "struct<file:string,rows_out:bigint,fingerprint:bigint>"

@@ -58,7 +58,7 @@ def main(argv=None) -> int:
     args = build_parser().parse_args(argv)
 
     from theta_spark.config import PipelineConfig
-    from theta_spark.pipeline import run_pipeline, run_pipeline_incremental, stage_complete
+    from theta_spark.pipeline import run_pipeline, run_pipeline_incremental, stage_complete, stage_manifest
     from theta_spark.session import get_spark
 
     spark = get_spark(app_name="theta-spark-kg", master=args.master)
@@ -83,14 +83,11 @@ def main(argv=None) -> int:
     else:
         stages = run_pipeline(spark, corpus, args.workdir, cfg, resume=args.resume)
 
-    import os
-
-    manifests = {}
-    for stage in stages:
-        mpath = os.path.join(args.workdir, stage, "_STAGE_MANIFEST.json")
-        if stage_complete(args.workdir, stage):
-            with open(mpath) as f:
-                manifests[stage] = json.load(f)
+    manifests = {
+        stage: stage_manifest(args.workdir, stage)
+        for stage in stages
+        if stage_complete(args.workdir, stage)
+    }
     print(json.dumps({"workdir": args.workdir, "scorer": cfg.scorer, "decoder": cfg.decoder, "stages": manifests}))
     spark.stop()
     return 0

@@ -589,7 +589,6 @@ def canonicalize_names(
     threshold: float = 0.9,
     max_iters: int = 20,
     max_bucket: int = 64,
-    cc_local_threshold: int | None = None,
 ) -> DataFrame:
     """(name) distinct -> (name, canonical). Names in the same near-duplicate
     component share the lexicographically smallest member as canonical.
@@ -657,8 +656,5 @@ def canonicalize_names(
     edges = jaccard_inline(pairs, k, threshold).localCheckpoint(eager=False)
     # CC over edge members only; names with no near-duplicate are identity
     # and are NOT returned — callers coalesce(canonical, name)
-    comp = connected_components(
-        edges, nodes=None, name_col="name", max_iters=max_iters,
-        local_threshold=cc_local_threshold,
-    )
+    comp = connected_components(edges, nodes=None, name_col="name", max_iters=max_iters)
     return comp.withColumnRenamed("component", "canonical")

@@ -10,20 +10,24 @@
       -> canonicalization (LSH + CC) on entity names     [small table]
       -> nodes/edges materialization (salted agg)        [shuffle]
 
-Every document is scored exactly once per run: the `mentions` and
-`triples` stages are both projections of the same per-document frame.
-Per-row invariant: sha256(content) via F.sha2 carried from the scan into the
-mentions and triples outputs (input_hint contract). Every stage is a
-checkpointable parquet snapshot via `run_checkpointed` with per-stage
-lineage + metrics (north rule: resumable with per-partition lineage and
-metrics tables).
+One driver (`_run_pipeline`) builds every run: a full build is a refresh
+against no prior (`run_pipeline`), in which every document is new
+(`Increment`). Every document is scored at most once per run: the
+`mentions` and `triples` stages are both projections of the same
+per-document frame. Per-row invariant: sha256(content) via F.sha2 carried
+from the scan into the mentions and triples outputs (input_hint
+contract). Every stage is a checkpointable parquet snapshot via
+`run_checkpointed` with per-stage lineage + metrics (north rule:
+resumable with per-partition lineage and metrics tables); the doc-keyed
+stages commit through `run_checkpointed_delta`, which against a prior
+writes only the delta plus a `_retired` doc-id table.
 """
 
 from __future__ import annotations
 
-import functools
 import json
 import os
+import threading
 import time
 
 import pyarrow as pa
@@ -297,7 +301,7 @@ def run_checkpointed_delta(
     stage: str,
     delta_build: "callable",
     retired_build: "callable",
-    base_workdir: str,
+    base_workdir: str | None,
     partition_cols: list | None = None,
     resume: bool = True,
     extra_manifest: dict | None = None,
@@ -322,10 +326,20 @@ def run_checkpointed_delta(
     stage that re-flattens on resume.
 
     Lineage/audit cover the delta files (the base snapshot is audited by
-    its own run's lineage). Returns the RESOLVED view."""
+    its own run's lineage). Returns the RESOLVED view.
+
+    Without a base (`base_workdir=None`: a full build, in which every
+    document is new) the stage is a self-contained run_checkpointed
+    snapshot and `retired_build` is not called."""
+    if base_workdir is None:
+        return run_checkpointed(
+            spark, workdir, stage, delta_build, partition_cols, resume, extra_manifest
+        )
 
     def _post():
-        retired_build().select("doc_id").distinct().coalesce(1).write.mode(
+        # no distinct: resolution is an anti-join, so a repeated doc_id is
+        # harmless
+        retired_build().select("doc_id").coalesce(1).write.mode(
             "overwrite"
         ).parquet(os.path.join(workdir, stage, "_retired"))
 
@@ -390,27 +404,22 @@ def rewrite_stage_full(spark: SparkSession, workdir: str, stage: str) -> DataFra
     return out
 
 
-def run_stages_parallel(spark: SparkSession, workdir: str, stages: list, resume: bool = True) -> dict:
-    """Commit independent stages CONCURRENTLY: `stages` is a list of
-    (stage_name, build, partition_cols) triples with no data dependencies
-    between them; each runs its own run_checkpointed in a thread (Spark's
-    scheduler accepts concurrent job submission — in local mode and on a
-    cluster the independent write jobs interleave instead of serializing
-    their fixed commit costs). Returns {stage_name: DataFrame}.
+def run_stages_parallel(commits: dict) -> dict:
+    """Run independent stage commits CONCURRENTLY: `commits` maps a stage
+    name to a no-argument thunk that commits it (a run_checkpointed or
+    run_checkpointed_delta call) with no data dependency on the others;
+    each runs in its own thread (Spark's scheduler accepts concurrent job
+    submission — in local mode and on a cluster the independent write
+    jobs interleave instead of serializing their fixed commit costs).
+    Returns {stage_name: DataFrame}.
 
     This targets the graph-layer tail: nodes and edge_provenance derive
     from the same materialized inputs but were committed back-to-back,
     paying two full write-job latencies where one wall suffices."""
     from concurrent.futures import ThreadPoolExecutor
 
-    if len(stages) == 1:
-        name, build, pcols = stages[0]
-        return {name: run_checkpointed(spark, workdir, name, build, pcols, resume)}
-    with ThreadPoolExecutor(max_workers=len(stages)) as pool:
-        futs = {
-            name: pool.submit(run_checkpointed, spark, workdir, name, build, pcols, resume)
-            for name, build, pcols in stages
-        }
+    with ThreadPoolExecutor(max_workers=len(commits)) as pool:
+        futs = {name: pool.submit(commit) for name, commit in commits.items()}
         return {name: fut.result() for name, fut in futs.items()}
 
 
@@ -478,7 +487,9 @@ def read_stage(spark: SparkSession, workdir: str, stage: str) -> DataFrame:
     if not base_dir:
         return local
     base = read_stage(spark, base_dir, stage)
-    retired = spark.read.parquet(os.path.join(workdir, stage, "_retired"))
+    # the key table's schema is fixed: given, it spares a schema-inference
+    # job per chain link
+    retired = spark.read.schema("doc_id STRING").parquet(os.path.join(workdir, stage, "_retired"))
     return base.join(retired, "doc_id", "left_anti").unionByName(local)
 
 
@@ -514,21 +525,46 @@ def audit_stage(spark: SparkSession, workdir: str, stage: str) -> DataFrame:
     )
 
 
+def _doc_changes(keys: DataFrame, prior_keys: DataFrame) -> DataFrame:
+    """(doc_id, cur, pri) for every doc_id whose SET of content keys
+    (sha256 values) differs between the current corpus and the prior run;
+    `cur` and `pri` say whether the doc_id has a version on each side.
+    One shuffle: a per-doc_id aggregate over the tagged union of both key
+    tables.
+
+    The unit of change is the doc_id, not the key, because delta stages
+    retire rows by doc_id: a doc_id that keeps one version and loses (or
+    gains) another has EVERY current version re-extracted, or retiring
+    it would drop the unchanged version's rows with the changed one's."""
+    shas = keys.select("doc_id", "sha256", F.lit(True).alias("is_cur")).unionByName(
+        prior_keys.select("doc_id", "sha256", F.lit(False).alias("is_cur"))
+    )
+    per_doc = shas.groupBy("doc_id").agg(
+        F.array_sort(F.collect_set(F.when(F.col("is_cur"), F.col("sha256")))).alias("cur_shas"),
+        F.array_sort(F.collect_set(F.when(~F.col("is_cur"), F.col("sha256")))).alias("pri_shas"),
+    )
+    return per_doc.where(F.col("cur_shas") != F.col("pri_shas")).select(
+        "doc_id",
+        (F.size("cur_shas") > 0).alias("cur"),
+        (F.size("pri_shas") > 0).alias("pri"),
+    )
+
+
 def corpus_delta(docs: DataFrame, prior_stage: DataFrame, prior_keys: DataFrame | None = None):
     """Split a keyed corpus against a prior stage snapshot by the
     (doc_id, sha256) content invariant.
 
     Returns (reused_rows, delta_docs):
-    - reused_rows: prior-stage rows whose document is byte-identical in
-      the new corpus (same doc_id AND same sha256) — safe to carry over
-      without recomputation;
-    - delta_docs: new-corpus docs that are new or changed (no prior row
-      with the same doc_id+sha256) — the only docs that need re-scoring.
+    - reused_rows: prior-stage rows of documents whose content keys are
+      unchanged — safe to carry over without recomputation;
+    - delta_docs: every current version of a document whose key set
+      changed (a new doc, changed content, or a version added or
+      removed; see _doc_changes) — the only docs that need re-scoring.
     Docs deleted from the corpus fall out of both sides.
 
-    Both joins are key-only (two narrow string columns) left_semi/
-    left_anti hash joins — at 10^12-file scale the delta detection costs
-    one shuffle of (doc_id, sha256) pairs, nothing proportional to
+    The detection is key-only (two narrow string columns): one aggregate
+    over (doc_id, sha256) pairs and a doc_id semi-join — at 10^12-file
+    scale it costs one shuffle of key pairs, nothing proportional to
     content size, and the expensive Arrow scoring stage runs ONLY on the
     delta (the whole point: a daily commit touches a fraction of files).
 
@@ -538,49 +574,22 @@ def corpus_delta(docs: DataFrame, prior_stage: DataFrame, prior_keys: DataFrame 
     re-extracts zero-yield docs on every incremental run, since a doc
     that legitimately produced no rows is absent from a row-bearing
     stage (judge r3 finding)."""
-    keys = docs.select("doc_id", "sha256")
     if prior_keys is None:
         prior_keys = prior_stage.select("doc_id", "sha256").distinct()
-    else:
-        prior_keys = prior_keys.select("doc_id", "sha256")
-    reused = prior_stage.join(keys.distinct(), ["doc_id", "sha256"], "left_semi")
-    delta_docs = docs.join(prior_keys, ["doc_id", "sha256"], "left_anti")
+    changed = _doc_changes(docs.select("doc_id", "sha256"), prior_keys)
+    reused = prior_stage.join(changed, "doc_id", "left_anti")
+    delta_docs = docs.join(changed.where(F.col("cur")).select("doc_id"), "doc_id", "left_semi")
     return reused, delta_docs
 
 
-def run_pipeline_incremental(
-    spark: SparkSession,
-    corpus: DataFrame,
-    workdir: str,
-    prior_workdir: str,
-    cfg: PipelineConfig | None = None,
-    resume: bool = True,
-):
-    """Incremental run against a prior run's snapshots: re-score ONLY
-    new/changed documents (by the doc_id+sha256 invariant), reuse prior
-    mentions/triples rows for byte-identical docs, then rebuild the graph
-    layer from the merged streams.
-
-    Canonicalization and the node/edge aggregates are recomputed over the
-    MERGED data by design: entity resolution is corpus-global (one new
-    mention can merge two existing clusters), but it runs over distinct
-    entity NAMES — orders of magnitude smaller than the corpus — while
-    the corpus-proportional cost (segment + score + decode) is paid only
-    for the delta. Output snapshots land in `workdir` with the same
-    stage layout as run_pipeline, so a later incremental run can chain
-    off this one; the extra `delta_stats` stage records what was reused.
-    """
-    cfg = cfg or PipelineConfig()
-    docs = with_doc_id(corpus)
-    cfg_fp = _cfg_fingerprint(cfg)
-
-    # fail FAST on config drift (ADVICE r3): a prior run scored under a
-    # different head/segmentation would otherwise surface as a late
-    # union/column error — or silently mix rows scored under different
-    # models. Old snapshots without a recorded config fall back to a
-    # column-set check at union time (unionByName still fails loud).
+def _check_prior_config(prior: str, cfg_fp: str) -> None:
+    """Fail FAST on config drift (ADVICE r3): a prior run scored under a
+    different head/segmentation would otherwise surface as a late
+    union/column error — or silently mix rows scored under different
+    models. Old snapshots without a recorded config fall back to a
+    column-set check at union time (unionByName still fails loud)."""
     for st in ("mentions", "triples"):
-        manifest = stage_manifest(prior_workdir, st)
+        manifest = stage_manifest(prior, st)
         prior_cfg = manifest.get("config")
         if prior_cfg is not None:
             # fingerprint-format migration: snapshots written before the
@@ -611,116 +620,157 @@ def run_pipeline_incremental(
             import warnings
 
             warnings.warn(
-                f"prior {st} stage at {prior_workdir} predates config recording: "
+                f"prior {st} stage at {prior} predates config recording: "
                 "config drift cannot be validated; the merge proceeds on "
                 "column-set compatibility only. Re-run full once to stamp it.",
-                stacklevel=2,
+                stacklevel=5,
             )
 
-    # prior scored-docs REGISTRY: every (doc_id, sha256) the prior run
-    # scored, including zero-yield docs. Without it (pre-r4 snapshots) the
-    # delta falls back to row-bearing stage keys, which re-extracts
-    # zero-yield docs every run (correct but not delta-proportional).
-    prior_keys = None
-    if stage_complete(prior_workdir, "scored_docs"):
-        prior_keys = read_stage(spark, prior_workdir, "scored_docs")
 
-    # delta-only commits: the big row stages write ONLY the delta
-    # extraction + a retired-doc key table; unchanged docs' rows resolve
-    # from the prior snapshot by reference (read_stage). Write volume is
-    # delta-proportional — the point of an incremental run at 10^12-file
-    # scale, where a full rewrite of byte-identical rows dwarfs the actual
-    # work. A stage is flattened back into a self-contained snapshot once
-    # its chain reaches cfg.delta_max_chain (or on demand with
-    # rewrite_stage_full).
-    import threading
+def _once(make: "callable") -> "callable":
+    """A getter for make()'s result, computed at most once — also when
+    several commit threads ask for it at the same time."""
+    lock = threading.Lock()
+    memo: list = []
 
-    _memo: dict = {}
-    _memo_lock = threading.Lock()
+    def get():
+        with lock:
+            if not memo:
+                memo.append(make())
+            return memo[0]
 
-    def _keys() -> DataFrame:
-        # (doc_id, sha256) of the CURRENT corpus, materialized once: five
-        # independent builders (retired docs x2, delta ids, scored_docs,
-        # delta_stats) consume it — several from parallel commit threads —
-        # and each lazy re-scan would re-read the corpus and re-hash every
-        # document's full content, measured as the delta-only mode's
-        # dominant overhead at 200k docs
-        with _memo_lock:
-            if "keys" not in _memo:
-                _memo["keys"] = docs.select("doc_id", "sha256").localCheckpoint(eager=True)
-            return _memo["keys"]
+    return get
 
-    def _prior_all_keys() -> DataFrame:
-        if prior_keys is not None:
-            return prior_keys.select("doc_id", "sha256")
-        return read_stage(spark, prior_workdir, "mentions").select("doc_id", "sha256").distinct()
 
-    def _retired_docs():
-        # prior docs no longer byte-identical in the current corpus
-        # (changed sha or deleted): their base rows must not resolve
-        return _prior_all_keys().join(_keys(), ["doc_id", "sha256"], "left_anti").select("doc_id")
+class Increment:
+    """The documents of one pipeline run, keyed against the run it
+    refreshes: `prior` is that run's workdir, or None for a full build —
+    a full build is a refresh against no prior, in which every document
+    is new.
 
-    def _delta_doc_ids():
-        return _keys().join(_prior_all_keys(), ["doc_id", "sha256"], "left_anti").select("doc_id")
+    Every doc-keyed stage (mentions, triples, scored_docs,
+    edge_provenance) commits through run_checkpointed_delta with `prior`
+    as its base: against a prior it writes only the rows of changed
+    documents plus a `_retired` doc-id table, so the write volume is
+    delta-proportional; without one, a self-contained snapshot. A
+    document is changed when its set of content keys differs from the
+    prior run's (_doc_changes). Each input below is materialized at most
+    once, when the first builder that needs it runs, so a resumed run
+    whose stages are all committed scores and scans nothing."""
 
-    @functools.cache
-    def _delta_scored() -> DataFrame:
-        # the delta docs scored ONCE, when the first of the two row stages
-        # builds; both commit projections of it
-        _, delta_docs = corpus_delta(
-            docs, read_stage(spark, prior_workdir, "mentions"), prior_keys=prior_keys
+    def __init__(self, spark, corpus, workdir, prior, cfg, resume):
+        self.spark, self.workdir, self.prior, self.cfg, self.resume = (
+            spark, workdir, prior, cfg, resume,
         )
-        return extract_docs(delta_docs, cfg).localCheckpoint(eager=True)
+        self.docs = with_doc_id(corpus)
+        self.cfg_fp = _cfg_fingerprint(cfg)
+        if prior is not None:
+            _check_prior_config(prior, self.cfg_fp)
+        # prior scored-docs REGISTRY: every (doc_id, sha256) the prior run
+        # scored, including zero-yield docs. Without it (pre-r4 snapshots)
+        # the prior keys are the row-bearing mentions keys, which
+        # re-extracts zero-yield docs every run (correct but not
+        # delta-proportional).
+        self.registry = None
+        if prior is not None and stage_complete(prior, "scored_docs"):
+            self.registry = read_stage(spark, prior, "scored_docs")
+        # (doc_id, sha256) of the CURRENT corpus: the change table,
+        # delta_stats and a registry-less scored_docs consume it — from
+        # parallel commit threads — and each lazy re-scan would re-read
+        # the corpus and re-hash every document's full content
+        self.keys = _once(lambda: self.docs.select("doc_id", "sha256").localCheckpoint(eager=True))
+        self.changes = _once(
+            lambda: _doc_changes(self.keys(), self._prior_keys()).localCheckpoint(eager=True)
+        )
+        self.scored = _once(self._score)
 
-    def commit(stage: str, project) -> DataFrame:
+    def _prior_keys(self) -> DataFrame:
+        if self.registry is not None:
+            return self.registry.select("doc_id", "sha256")
+        return read_stage(self.spark, self.prior, "mentions").select("doc_id", "sha256").distinct()
+
+    def _score(self) -> DataFrame:
+        # the changed docs (every doc of a full build) scored ONCE; each
+        # row stage commits a projection of it. The split runs on the
+        # materialized keys, so only the final semi-join scans the corpus
+        # content again, to fetch the delta docs' text.
+        docs = self.docs
+        if self.prior is not None:
+            _, delta_keys = corpus_delta(
+                self.keys(), read_stage(self.spark, self.prior, "mentions"), prior_keys=self.registry
+            )
+            docs = docs.join(delta_keys, ["doc_id", "sha256"], "left_semi")
+        return extract_docs(docs, self.cfg).localCheckpoint(eager=True)
+
+    def retired(self) -> DataFrame:
+        """doc_ids whose prior rows must not resolve: prior docs that
+        changed or left the corpus."""
+        return self.changes().where(F.col("pri")).select("doc_id")
+
+    def redo(self) -> DataFrame:
+        """doc_ids re-extracted by this refresh."""
+        return self.changes().where(F.col("cur")).select("doc_id")
+
+    def commit_extraction(self):
+        """Commit `mentions` and `triples`, both projections of the ONE
+        scoring pass. Returns (mentions, triples), resolved."""
+
+        def commit(stage: str, project) -> DataFrame:
+            return run_checkpointed_delta(
+                self.spark, self.workdir, stage, lambda: project(self.scored()), self.retired,
+                self.prior, resume=self.resume, extra_manifest={"config": self.cfg_fp},
+                max_chain=self.cfg.delta_max_chain,
+            )
+
+        return commit("mentions", doc_mentions), commit("triples", doc_triples)
+
+    def commit_scored_docs(self) -> DataFrame:
+        """The scored-docs registry: every (doc_id, sha256) scored —
+        INCLUDING zero-yield docs, which row-bearing stages cannot
+        witness. A refresh deltas against it, so an unchanged zero-mention
+        doc is never re-extracted. Against a prior that has no registry
+        there is no base to reference, so the snapshot holds every
+        current key."""
+        if self.prior is not None and self.registry is None:
+            return run_checkpointed(
+                self.spark, self.workdir, "scored_docs", lambda: self.keys().distinct(),
+                resume=self.resume,
+            )
         return run_checkpointed_delta(
-            spark, workdir, stage, lambda: project(_delta_scored()), _retired_docs,
-            prior_workdir, resume=resume, extra_manifest={"config": cfg_fp},
-            max_chain=cfg.delta_max_chain,
+            self.spark, self.workdir, "scored_docs",
+            lambda: self.scored().select("doc_id", "sha256").distinct(), self.retired,
+            self.prior, resume=self.resume, max_chain=self.cfg.delta_max_chain,
         )
 
-    mentions = commit("mentions", doc_mentions)
-    triples = commit("triples", doc_triples)
+    def commit_delta_stats(self) -> DataFrame:
+        """One row (n_docs, n_extracted, n_retired) of key counts against
+        the prior: one lazy aggregate over the tagged union of current and
+        prior keys, run by the stage's own write job. Per key, how often it
+        occurs on each side: a current row counts as extracted when its
+        key has no prior occurrence, a prior row as retired when its key
+        has no current one — the counts of the two key anti-joins, without
+        an action or a driver-side row list."""
 
-    def _build_scored_docs():
-        return _keys().distinct()
-
-    def _build_delta_stats():
-        # one lazy aggregate over the tagged union of current and prior
-        # keys, run by the stage's own write job: per key, how often it
-        # occurs on each side. A current row is extracted when its key has
-        # no prior occurrence, a prior row retired when its key has no
-        # current one — the counts of the two key anti-joins, without an
-        # action or a driver-side row list.
-        per_key = (
-            _keys().select("*", F.lit(1).alias("cur"), F.lit(0).alias("pri"))
-            .unionByName(
-                _prior_all_keys().select("*", F.lit(0).alias("cur"), F.lit(1).alias("pri"))
+        def build():
+            per_key = (
+                self.keys().select("*", F.lit(1).alias("cur"), F.lit(0).alias("pri"))
+                .unionByName(
+                    self._prior_keys().select("*", F.lit(0).alias("cur"), F.lit(1).alias("pri"))
+                )
+                .groupBy("doc_id", "sha256")
+                .agg(F.sum("cur").alias("cur"), F.sum("pri").alias("pri"))
             )
-            .groupBy("doc_id", "sha256")
-            .agg(F.sum("cur").alias("cur"), F.sum("pri").alias("pri"))
-        )
 
-        def total(c):  # 0, not NULL, when no row qualifies
-            return F.coalesce(F.sum(c), F.lit(0))
+            def total(c):  # 0, not NULL, when no row qualifies
+                return F.coalesce(F.sum(c), F.lit(0))
 
-        return per_key.agg(
-            total("cur").alias("n_docs"),
-            total(F.when(F.col("pri") == 0, F.col("cur"))).alias("n_extracted"),
-            total(F.when(F.col("cur") == 0, F.col("pri"))).alias("n_retired"),
-        )
+            return per_key.agg(
+                total("cur").alias("n_docs"),
+                total(F.when(F.col("pri") == 0, F.col("cur"))).alias("n_extracted"),
+                total(F.when(F.col("cur") == 0, F.col("pri"))).alias("n_retired"),
+            )
 
-    graph = _commit_graph_layer(
-        spark, workdir, triples, mentions, cfg, resume,
-        extra_stages=[
-            ("scored_docs", _build_scored_docs, None),
-            ("delta_stats", _build_delta_stats, None),
-        ],
-        delta_base=prior_workdir,
-        retired_docs_build=_retired_docs,
-        delta_doc_ids_build=_delta_doc_ids,
-    )
-    return {"mentions": mentions, "triples": triples, **graph}
+        return run_checkpointed(self.spark, self.workdir, "delta_stats", build, resume=self.resume)
 
 
 def _commit_graph_layer(
@@ -730,61 +780,56 @@ def _commit_graph_layer(
     mentions: DataFrame,
     cfg: PipelineConfig,
     resume: bool,
-    extra_stages: list | None = None,
-    delta_base: str | None = None,
-    retired_docs_build: "callable | None" = None,
-    delta_doc_ids_build: "callable | None" = None,
+    inc: Increment | None = None,
 ):
-    """Commit the graph-layer stages (nodes, canon_map, edge_provenance,
-    then edges) with the independent commits batched CONCURRENTLY — the
-    graph tail is dominated by fixed per-commit costs (write-job latency,
-    lineage aggregate, small shuffles on an otherwise idle cluster), so
-    the nodes/edge_provenance walls overlap instead of adding. The
-    builders share one canonical map via a lock-guarded memo: the first
-    thread materializes it (its eager checkpoint) once.
+    """Commit the graph-layer stages as ONE batch of concurrent commits:
+    nodes, canon_map, edge_provenance and edges, plus — for a pipeline
+    run (`inc`) — its scored_docs registry and, against a prior, its
+    delta_stats. The graph tail is dominated by fixed per-commit costs
+    (write-job latency, lineage aggregate, small shuffles on an otherwise
+    idle cluster), so the commit walls overlap instead of adding. The
+    builders share one canonical map: the first thread that needs it
+    materializes it (its eager checkpoint) once.
 
     nodes partitioned by category, edges by predicate (north rule:
     partitioned node/edge tables — Iceberg partition spec on a cluster,
     hive-style parquet dirs in the sandbox fallback): both are
     low-cardinality columns every downstream graph query filters on, so
     the scan prunes whole directories. The tiny canon_map snapshot is what
-    lets the NEXT incremental run detect which canonical assignments
-    drifted without recomputing anything.
+    lets the NEXT refresh detect which canonical assignments drifted
+    without recomputing anything.
 
-    `extra_stages` (name, build, partition_cols) are independent small
-    commits (scored_docs, delta_stats) that ride the same parallel batch.
+    edges is the aggregate of the canonical triple stream (the resolved
+    triples re-keyed through the current map) in every run: row-identical
+    to aggregating edge_provenance (pinned by the audit test: edges ==
+    groupBy(edge_provenance)), but a concurrent job instead of one
+    serialized behind the provenance write.
 
-    Incremental mode (`delta_base` set, from run_pipeline_incremental):
     edge_provenance — one row per triple OCCURRENCE, the biggest graph
-    snapshot — is committed DELTA-ONLY when the prior run recorded a
-    canon_map: rows are rewritten only for (a) this run's new/changed
-    docs and (b) docs owning a triple whose subj/obj canonical assignment
-    CHANGED between the prior and current map (entity resolution is
-    corpus-global: one new mention can merge two existing clusters, which
-    re-keys old rows). Everything else resolves from the base snapshot by
-    reference. Nodes/edges are aggregates over the full resolved streams
-    — recomputed, but their outputs are orders of magnitude smaller."""
-    import threading
+    snapshot — is a doc-keyed stage. Without a prior it is written whole.
+    Against a prior (`inc.prior`) it is committed DELTA-ONLY: rows are
+    rewritten only for (a) this run's changed docs and (b) docs owning a
+    triple whose subj/obj canonical assignment CHANGED between the prior
+    and the current map (entity resolution is corpus-global: one new
+    mention can merge two existing clusters, which re-keys old rows).
+    Everything else resolves from the base snapshot by reference. The
+    prior must have a canon_map stage: building the delta without one
+    raises ValueError. nodes and edges are aggregates over the full
+    resolved streams — recomputed, but their outputs are orders of
+    magnitude smaller."""
+    prior = inc.prior if inc is not None else None
 
-    memo: dict = {}
-    lock = threading.RLock()  # _affected_docs nests _parts() under the lock
-
+    @_once
     def _parts():
-        with lock:
-            if "canon" not in memo:
-                canon = compute_canon_map(mentions, cfg)
-                n, _, t = build_nodes_edges(triples, mentions, cfg, canon=canon)
-                memo["canon"] = canon
-                memo["n"] = n
-                # lazy canonical-keyed stream: in full mode BOTH the
-                # edge_provenance write and the edges aggregate consume it
-                # concurrently (same plan, two independent jobs — the agg
-                # re-runs the cheap broadcast-canon join instead of
-                # waiting for the snapshot write, taking the edges wall
-                # off the tail's critical path); in delta mode `t` is
-                # never materialized at all
-                memo["t"] = t
-        return memo
+        canon = compute_canon_map(mentions, cfg)
+        n, _, t = build_nodes_edges(triples, mentions, cfg, canon=canon)
+        # `t` is the lazy canonical-keyed stream: the edges aggregate and,
+        # in a full build, the edge_provenance write consume it
+        # concurrently (same plan, two independent jobs — the aggregate
+        # re-runs the cheap broadcast-canon join instead of waiting for
+        # the snapshot write, taking the edges wall off the tail's
+        # critical path)
+        return {"canon": canon, "n": n, "t": t}
 
     def _prov_layout():
         # Write layout for the biggest snapshot (one row per triple
@@ -802,166 +847,108 @@ def _commit_graph_layer(
             F.col("pred"), F.pmod(F.xxhash64("doc_id"), F.lit(16))
         ).sortWithinPartitions("pred", "subj", "obj")
 
-    prov_delta_mode = delta_base is not None and stage_complete(delta_base, "canon_map")
-    if delta_base is not None and not prov_delta_mode:
-        import warnings
-
-        warnings.warn(
-            f"prior run at {delta_base} has no canon_map snapshot: canonical "
-            "drift cannot be diffed, so edge_provenance is rewritten in full "
-            "this run (delta-only resumes on the next incremental).",
-            stacklevel=2,
-        )
-
-    def _edges_from_stream():
-        # full mode: aggregate the SAME lazy canonical stream the
-        # provenance writer materializes — row-identical to aggregating
-        # the written snapshot (pinned by the audit test: edges ==
-        # groupBy(edge_provenance)), but runs as a concurrent job instead
-        # of serializing behind the biggest write. The recomputed work is
-        # one broadcast-canon join over the already-snapshotted triples.
-        return _parts()["t"].groupBy("subj", "pred", "obj").agg(
-            F.count(F.lit(1)).alias("n_docs")
-        )
-
-    batch = [
-        ("nodes", lambda: _parts()["n"], ["category"]),
-        ("canon_map", lambda: _parts()["canon"], None),
-        *(
-            []
-            if prov_delta_mode
-            else [
-                ("edge_provenance", _prov_layout, ["pred"]),
-                ("edges", _edges_from_stream, ["pred"]),
-            ]
-        ),
-        *(extra_stages or []),
-    ]
-    out = run_stages_parallel(spark, workdir, batch, resume=resume)
-
-    if prov_delta_mode:
-
-        def _affected_docs():
-            # docs owning any triple that touches a name whose CANONICAL
-            # assignment drifted between the prior and current map: their
-            # base provenance rows carry stale canonical keys and must be
-            # re-keyed (from the already-extracted triples — no
-            # re-scoring). A name absent from a map canonicalizes to
-            # itself, so drift = the coalesced assignment differs on a
-            # full outer join of the two tiny maps. Memoized: both the
-            # delta and the retired builders consume it.
-            with lock:
-                if "aff" not in memo:
-                    prior_canon = read_stage(spark, delta_base, "canon_map")
-                    changed_names = (
-                        prior_canon.withColumnRenamed("canonical", "c_old")
-                        .join(
-                            _parts()["canon"].withColumnRenamed("canonical", "c_new"),
-                            on="name",
-                            how="full_outer",
-                        )
-                        .where(F.coalesce("c_old", "name") != F.coalesce("c_new", "name"))
-                        .select("name")
-                    )
-                    by_subj = triples.join(
-                        F.broadcast(changed_names.withColumnRenamed("name", "subj")),
-                        "subj",
-                        "left_semi",
-                    ).select("doc_id")
-                    by_obj = triples.join(
-                        F.broadcast(changed_names.withColumnRenamed("name", "obj")),
-                        "obj",
-                        "left_semi",
-                    ).select("doc_id")
-                    memo["aff"] = (
-                        by_subj.unionByName(by_obj).distinct().localCheckpoint(eager=True)
-                    )
-            return memo["aff"]
-
-        def _prov_delta():
-            redo = delta_doc_ids_build().select("doc_id").unionByName(_affected_docs()).distinct()
-            return canonical_triples(triples.join(redo, "doc_id", "left_semi"), _parts()["canon"])
-
-        def _prov_retired():
-            return retired_docs_build().select("doc_id").unionByName(_affected_docs()).distinct()
-
-        edge_provenance = run_checkpointed_delta(
-            spark,
-            workdir,
-            "edge_provenance",
-            _prov_delta,
-            _prov_retired,
-            delta_base,
-            partition_cols=["pred"],
-            resume=resume,
-            max_chain=cfg.delta_max_chain,
-        )
-    else:
-        edge_provenance = out["edge_provenance"]
-
-    if prov_delta_mode:
-        # delta mode: the edges aggregate needs the RESOLVED provenance
-        # stream (base − retired ∪ delta), which exists only after the
-        # delta commit — sequential by data dependency. The sha256 content
-        # invariant stays auditable end-to-end either way: edges ==
-        # groupBy(edge_provenance) is pinned by test in both modes.
-        def _build_edges():
-            return edge_provenance.groupBy("subj", "pred", "obj").agg(
-                F.count(F.lit(1)).alias("n_docs")
+    @_once
+    def _affected_docs():
+        # docs owning any triple that touches a name whose CANONICAL
+        # assignment drifted between the prior and current map: their
+        # base provenance rows carry stale canonical keys and must be
+        # re-keyed (from the already-extracted triples — no re-scoring).
+        # A name absent from a map canonicalizes to itself, so drift = the
+        # coalesced assignment differs on a full outer join of the two
+        # tiny maps. Both the delta and the retired builders consume it.
+        changed_names = (
+            read_stage(spark, prior, "canon_map").withColumnRenamed("canonical", "c_old")
+            .join(
+                _parts()["canon"].withColumnRenamed("canonical", "c_new"),
+                on="name",
+                how="full_outer",
             )
-
-        edges = run_checkpointed(
-            spark, workdir, "edges", _build_edges, partition_cols=["pred"], resume=resume
+            .where(F.coalesce("c_old", "name") != F.coalesce("c_new", "name"))
+            .select("name")
         )
-    else:
-        edges = out["edges"]
-    result = {
-        "nodes": out["nodes"],
-        "canon_map": out["canon_map"],
-        "edge_provenance": edge_provenance,
-        "edges": edges,
+        by_subj = triples.join(
+            F.broadcast(changed_names.withColumnRenamed("name", "subj")), "subj", "left_semi"
+        ).select("doc_id")
+        by_obj = triples.join(
+            F.broadcast(changed_names.withColumnRenamed("name", "obj")), "obj", "left_semi"
+        ).select("doc_id")
+        return by_subj.unionByName(by_obj).distinct().localCheckpoint(eager=True)
+
+    def _prov_delta():
+        if not stage_complete(prior, "canon_map"):
+            raise ValueError(
+                f"prior run at {prior} has no canon_map stage: the canonical "
+                "drift of its edge_provenance rows cannot be diffed; refresh "
+                "against a run that committed canon_map, or re-run full"
+            )
+        redo = inc.redo().unionByName(_affected_docs())
+        return canonical_triples(triples.join(redo, "doc_id", "left_semi"), _parts()["canon"])
+
+    def _prov_retired():
+        return inc.retired().unionByName(_affected_docs())
+
+    def _edges():
+        return _parts()["t"].groupBy("subj", "pred", "obj").agg(F.count(F.lit(1)).alias("n_docs"))
+
+    batch = {
+        "nodes": lambda: run_checkpointed(
+            spark, workdir, "nodes", lambda: _parts()["n"], ["category"], resume
+        ),
+        "canon_map": lambda: run_checkpointed(
+            spark, workdir, "canon_map", lambda: _parts()["canon"], None, resume
+        ),
+        "edge_provenance": lambda: run_checkpointed_delta(
+            spark, workdir, "edge_provenance", _prov_layout if prior is None else _prov_delta,
+            _prov_retired, prior, ["pred"], resume, max_chain=cfg.delta_max_chain,
+        ),
+        "edges": lambda: run_checkpointed(spark, workdir, "edges", _edges, ["pred"], resume),
     }
-    for name, _, _ in extra_stages or []:
-        result[name] = out[name]
-    return result
+    if inc is not None:
+        batch["scored_docs"] = inc.commit_scored_docs
+        if prior is not None:
+            batch["delta_stats"] = inc.commit_delta_stats
+    return run_stages_parallel(batch)
 
 
-def commit_extraction(
-    spark: SparkSession, corpus: DataFrame, workdir: str, cfg: PipelineConfig, resume: bool = True
+def _run_pipeline(spark, corpus, workdir, prior, cfg, resume):
+    """The one pipeline driver: extraction commits, then the graph-layer
+    batch. `prior=None` is a full build."""
+    inc = Increment(spark, corpus, workdir, prior, cfg or PipelineConfig(), resume)
+    mentions, triples = inc.commit_extraction()
+    graph = _commit_graph_layer(spark, workdir, triples, mentions, inc.cfg, resume, inc)
+    return {"mentions": mentions, "triples": triples, **graph}
+
+
+def run_pipeline_incremental(
+    spark: SparkSession,
+    corpus: DataFrame,
+    workdir: str,
+    prior_workdir: str,
+    cfg: PipelineConfig | None = None,
+    resume: bool = True,
 ):
-    """Commit the `mentions` and `triples` stages of a full run as
-    projections of ONE per-document scoring pass. The pass is materialized
-    when the first of the two builders runs, so a resumed run that already
-    has both snapshots scores nothing. Returns (mentions, triples)."""
-    cfg_fp = _cfg_fingerprint(cfg)
-    scored = functools.cache(
-        lambda: extract_docs(with_doc_id(corpus), cfg).localCheckpoint(eager=True)
-    )
+    """Incremental run against a prior run's snapshots: re-score ONLY
+    changed documents (by the doc_id+sha256 invariant; see Increment),
+    reuse prior mentions/triples rows for unchanged docs by reference,
+    then rebuild the graph layer from the merged streams. It is the same
+    driver as run_pipeline, which is a refresh against no prior.
 
-    def commit(stage: str, project) -> DataFrame:
-        return run_checkpointed(
-            spark, workdir, stage, lambda: project(scored()), resume=resume,
-            extra_manifest={"config": cfg_fp},
-        )
-
-    return commit("mentions", doc_mentions), commit("triples", doc_triples)
+    Canonicalization and the node/edge aggregates are recomputed over the
+    MERGED data by design: entity resolution is corpus-global (one new
+    mention can merge two existing clusters), but it runs over distinct
+    entity NAMES — orders of magnitude smaller than the corpus — while
+    the corpus-proportional cost (segment + score + decode) is paid only
+    for the delta. The doc-keyed stages (mentions, triples, scored_docs,
+    edge_provenance) store only their delta plus a `_retired` doc-id
+    table and resolve through read_stage; a stage is flattened back into
+    a self-contained snapshot once its chain reaches cfg.delta_max_chain.
+    Output snapshots land in `workdir` with the same stage layout as
+    run_pipeline, so a later refresh can chain off this one; the extra
+    `delta_stats` stage records the key counts of the delta.
+    """
+    return _run_pipeline(spark, corpus, workdir, prior_workdir, cfg, resume)
 
 
 def run_pipeline(spark: SparkSession, corpus: DataFrame, workdir: str, cfg: PipelineConfig | None = None, resume: bool = True):
     """Full checkpoint-resumable run; returns dict of stage DataFrames."""
-    cfg = cfg or PipelineConfig()
-    mentions, triples = commit_extraction(spark, corpus, workdir, cfg, resume)
-
-    # scored-docs registry: every (doc_id, sha256) this run scored —
-    # INCLUDING zero-yield docs, which row-bearing stages cannot witness.
-    # Incremental runs delta against this registry so an unchanged
-    # zero-mention doc is never re-extracted. Tiny (two short string
-    # columns), committed in the parallel graph batch.
-    def _build_scored_docs():
-        return with_doc_id(corpus).select("doc_id", "sha256").distinct()
-
-    graph = _commit_graph_layer(
-        spark, workdir, triples, mentions, cfg, resume,
-        extra_stages=[("scored_docs", _build_scored_docs, None)],
-    )
-    return {"mentions": mentions, "triples": triples, **graph}
+    return _run_pipeline(spark, corpus, workdir, None, cfg, resume)

@@ -43,11 +43,7 @@ def get_spark(
         # 40%+ byte cut is shuffle-spill + object-store bandwidth saved on
         # every stage commit (the write tail is the part of the job a
         # bigger cluster cannot parallelize away; BENCH.md §C)
-        # (env-overridable for codec A/B runs: SPARK_GRAFT_PARQUET_CODEC)
-        .config(
-            "spark.sql.parquet.compression.codec",
-            os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "zstd"),
-        )
+        .config("spark.sql.parquet.compression.codec", "zstd")
         # local mode: the driver JVM IS the executor — size the heap for
         # task-count × (window sort + shuffle + parquet writer) buffers, or
         # high-core runs thrash GC and scale NEGATIVELY (measured: triples
