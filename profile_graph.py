@@ -4,10 +4,13 @@ at a given doc count and parallelism level, so the superlinear-phase fix
 (two-level CC, parallelism-scaled threshold — canonicalize.py) is
 evidenced per phase rather than inferred from the e2e wall.
 
-Each phase is isolated with an EAGER checkpoint boundary before timing
-(production code uses lazy checkpoints to avoid exactly these extra
-actions; a profiler wants the opposite trade). Run one JVM per
-invocation:
+Each phase is isolated with an EAGER checkpoint boundary before timing,
+so that its work runs inside its own timer (production code uses lazy
+checkpoints; under AQE those still run their shuffle stages when called
+and defer only the final stage to the consuming job). The five phases
+are the distributed path; `single_task` times the one-task path that
+canonicalize_names takes for tables of at most SINGLE_TASK_BUDGET names,
+on the same name table. Run one JVM per invocation:
 
     python profile_graph.py <n_docs> <cpus>
 
@@ -20,7 +23,6 @@ prints one JSON line:
 from __future__ import annotations
 
 import json
-import math
 import os
 import sys
 import time
@@ -35,12 +37,13 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from theta_spark.canonicalize import (
+        _bucket_pairs,
+        _canonicalize_local,
+        _hashed_names,
+        _min_agree,
+        _star_pairs,
         connected_components,
-        deletion_candidate_pairs,
-        inline_signatures,
         jaccard_inline,
-        lsh_candidate_pairs,
-        shingle_array,
     )
     from theta_spark.config import PipelineConfig
     from theta_spark.corpus import corpus_df
@@ -86,27 +89,25 @@ def main() -> None:
     )
     counts["n_names"] = names.count()
 
-    n_sh = F.size(F.array_distinct(shingle_array(F.col("name"), k)))
-    max_short = max(2, math.ceil((1 + threshold) / (1 - threshold)) - 1) if threshold < 1 else 64
-    short = names.filter(n_sh <= max_short)
-    long_tail = names.filter(n_sh >= max_short - 1)
+    # the one narrow projection both production paths group (not timed on
+    # its own: it is lazy and runs inside each candidate phase)
+    hashed = _hashed_names(names, k, num_hashes, bands, threshold)
 
     # phase 2: deletion-neighborhood candidates (short names, exact)
     pairs_short = timed(
         "candidates_deletion",
-        lambda: deletion_candidate_pairs(short, "name", k, threshold=threshold)
+        lambda: _star_pairs(hashed.where(F.col("keys").isNotNull()))
         .localCheckpoint(eager=True),
     )
     counts["n_pairs_short"] = pairs_short.count()
 
     # phase 3: minhash + LSH banding candidates (long tail)
-    min_agree = math.ceil(max(0.0, threshold - 0.25) * num_hashes)
     pairs_long = timed(
         "candidates_lsh",
-        lambda: lsh_candidate_pairs(
-            inline_signatures(long_tail, "name", k, num_hashes),
-            "name", bands, 64,  # canonicalize_names' max_bucket default
-            min_agree=min_agree,
+        lambda: _bucket_pairs(
+            hashed.where(F.col("buckets").isNotNull()),
+            64,  # canonicalize_names' max_bucket default
+            _min_agree(threshold, num_hashes),
         ).localCheckpoint(eager=True),
     )
     counts["n_pairs_long"] = pairs_long.count()
@@ -126,6 +127,14 @@ def main() -> None:
         lambda: connected_components(edges).localCheckpoint(eager=True),
     )
     counts["n_components"] = comp.select("component").distinct().count()
+
+    # the one-task path over the same name table (steps 2-5 in one task)
+    timed(
+        "single_task",
+        lambda: _canonicalize_local(
+            names, k, num_hashes, bands, threshold, 64
+        ).localCheckpoint(eager=True),
+    )
 
     b1, s1, tj1 = _proc_stat()
     out = {

@@ -177,3 +177,76 @@ def test_two_level_cc_large_chain_and_cliques(spark):
         ).collect()
     }
     assert got == expected
+
+
+def _adversarial_names():
+    """~1.3k names that stress every grouping of the canonicalization
+    paths: an LSH family far above max_bucket, single-edit families whose
+    shingle counts straddle each threshold's short/long boundary, numeric
+    suffix families, non-ASCII text, "" and 1-2-char names."""
+    import random
+
+    rng = random.Random(11)
+    names = ["", "a", "b", "ab", "ba", "aa", "é", "éé", "日", "日本"]
+    # one long prefix with 150 suffixes: members collide in LSH band
+    # buckets far above max_bucket=64
+    names += [f"shared_long_identifier_prefix_{i:03d}" for i in range(150)]
+    names += [f"helper{i}" for i in range(40)] + [f"config_loader_v{i}" for i in range(30)]
+    alphabet = "abcdefgh_"
+    for length in range(3, 27):  # shingle counts 1..24 with k=3
+        for _ in range(8):
+            base = "".join(rng.choice(alphabet) for _ in range(length))
+            i = rng.randrange(length)
+            names += [
+                base,
+                base + rng.choice(alphabet),  # one shingle more
+                base[:-1],  # one shingle less
+                base[:i] + rng.choice(alphabet) + base[i + 1:],  # substitution
+                base[:i] + base[i + 1:],  # deletion inside
+            ]
+    for word in ["données_utilisateur", "日本語の識別子", "🚀_launch_pad", "λόγος_ανάλυση"]:
+        names += [word, word + "s", word[:-1], word.upper(), word + "_" + word]
+    return names
+
+
+@pytest.mark.parametrize("threshold", [0.9, 0.8, 0.7])
+def test_single_task_path_matches_distributed_path(spark, threshold):
+    """The one-task path emits exactly the distributed path's rows on the
+    same distinct name table, including where the LSH cap bites."""
+    from theta_spark.canonicalize import (
+        _canonicalize_distributed,
+        _canonicalize_local,
+        _hashed_names,
+    )
+
+    kw = dict(k=3, num_hashes=16, bands=4, threshold=threshold, max_bucket=64)
+    names = _names_df(spark, _adversarial_names()).distinct().localCheckpoint()
+    hashed = _hashed_names(names, kw["k"], kw["num_hashes"], kw["bands"], threshold)
+    biggest = (
+        hashed.select(F.posexplode("buckets").alias("band", "bucket"))
+        .groupBy("band", "bucket").count().agg(F.max("count")).first()[0]
+    )
+    assert biggest > kw["max_bucket"]
+    local = sorted(map(tuple, _canonicalize_local(names, **kw).collect()))
+    dist = sorted(map(tuple, _canonicalize_distributed(names, max_iters=20, **kw).collect()))
+    assert len(local) > 100
+    assert local == dist
+
+
+def test_canon_map_of_small_table_runs_few_jobs(spark):
+    """A small name table is canonicalized by the one-task path: at most 6
+    Spark jobs (the distributed path starts 16)."""
+    from theta_spark.config import PipelineConfig
+    from theta_spark.pipeline import compute_canon_map
+
+    mentions = spark.createDataFrame(
+        [(n,) for n in _adversarial_names()[:400]], "norm string"
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("canon-job-pin", "compute_canon_map")
+    try:
+        canon = compute_canon_map(mentions, PipelineConfig())
+    finally:
+        sc._jsc.clearJobGroup()
+    assert canon.count() > 0
+    assert len(sc.statusTracker().getJobIdsForGroup("canon-job-pin")) <= 6

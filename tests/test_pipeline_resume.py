@@ -208,3 +208,52 @@ def test_empty_corpus_pipeline_and_resume(spark, tmp_path):
     # matching key are 0, not NULL
     inc = run_pipeline_incremental(spark, corpus.limit(0), str(tmp_path / "wd2"), wd)
     assert [tuple(r) for r in inc["delta_stats"].collect()] == [(0, 0, 2)]
+
+
+def test_once_memoizes_failures():
+    """Commit threads share memoized stage inputs (_once): when make()
+    raises, it still runs once, and every concurrent caller gets its
+    error."""
+    import sys
+    import threading
+    import time
+
+    import pytest
+
+    from theta_spark.pipeline import _once
+
+    calls = []
+    n = 16  # more threads than cores
+    barrier = threading.Barrier(n, timeout=30)
+
+    def make():
+        calls.append(1)
+        time.sleep(0.05)  # callers arrive while the first one builds
+        raise RuntimeError("build failed")
+
+    get = _once(make)
+    errors = []
+
+    def caller():
+        barrier.wait()
+        try:
+            get()
+        except RuntimeError as e:
+            errors.append(str(e))
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=caller) for _ in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert len(calls) == 1
+    assert errors == ["build failed"] * n
+    with pytest.raises(RuntimeError, match="build failed"):
+        get()
+    assert len(calls) == 1

@@ -8,23 +8,30 @@ is exact-key only — SURVEY.md §2.7); built Spark-first here:
    distinct-name table is checkpointed ONCE (recompute amplification of
    its lineage across the candidate self-joins was the dominant cost of
    the whole graph phase before this);
-2. candidate pairs routed by shingle count:
+2. ONE narrow projection (`_hashed_names`) computes every hash that
+   candidate generation groups on, routed by shingle count:
    - short names (the bulk of an identifier vocabulary): deletion-
-     neighborhood blocking (`deletion_candidate_pairs`) — EXACT at high
-     thresholds, no probabilistic machinery;
+     neighborhood keys (`deletion_keys`) — EXACT at high thresholds, no
+     probabilistic machinery;
    - long tail: MinHash signatures computed INLINE (array_min over
-     xxhash64 of the shingle array), LSH banding with window-capped
-     buckets + a co-partitioned self-join, and a signature-agreement
-     prefilter before the exact verify;
-3. exact Jaccard verify computed INLINE from the two name strings
-   (array_intersect/array_union of their shingle arrays) on the distinct
-   candidate stream; the verified edge set is checkpointed (lazily —
-   the CC edge-count action materializes the whole candidate DAG in one
-   job; the intermediate checkpoints dedup compute via the RDD cache
-   without paying a serialized driver action each);
-4. connected components by alternating large-star/small-star over the
-   (tiny) surviving edge set, one fingerprint action per round;
+     xxhash64 of the shingle array) and their LSH band buckets; buckets
+     are window-capped and a signature-agreement prefilter runs before
+     the exact verify;
+3. exact Jaccard verify over the two names' shingle sets, on the distinct
+   candidate stream;
+4. connected components over the (tiny) verified edge set;
 5. canonical id = min name in each component; identity names omitted.
+
+Steps 2-5 run on one of two physical paths, picked by one count of the
+distinct-name table (`canonicalize_names`): up to SINGLE_TASK_BUDGET
+names, ONE Arrow task groups the projection and closes components by
+union-find (`_canonicalize_local`); above it, Spark operators do the
+grouping (`_canonicalize_distributed`). Both return the same rows.
+
+Note on the lazy cuts: under AQE, `localCheckpoint(eager=False)` runs the
+shuffle stages of the plan below it when it is CALLED; only the final
+stage is deferred to the first job that consumes the checkpoint. A cut
+above a shuffle therefore saves recompute, not jobs.
 
 At 10^12-file scale the distinct-name table is orders of magnitude smaller
 than mentions; the only wide ops are names.distinct(), the bucket groupBy,
@@ -37,6 +44,8 @@ than being recomputed per candidate pair.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -66,22 +75,19 @@ def _mh_hash(shingle_col, seed: int):
     return F.xxhash64(F.lit(seed), shingle_col)
 
 
-def inline_signatures(
-    names: DataFrame, name_col: str = "name", k: int = 3, num_hashes: int = 16
-) -> DataFrame:
-    """(name) -> (name, sig array<long>) as a narrow projection: the MinHash
-    of a short string needs no shingle table and no aggregation."""
+def minhash_sig(shingle_arr, num_hashes: int = 16):
+    """Column expr: the MinHash signature array<long> of a shingle-array
+    column, one array_min per seed (order-free, so a sorted array gives
+    the same signature)."""
     def _hash_with_seed(seed):
         # NOTE: must be a one-arg lambda — a two-parameter lambda (e.g. a
         # seed smuggled via default arg) is interpreted by F.transform as
         # (element, index) and silently replaces the seed with the index
         return lambda s: _mh_hash(s, seed)
 
-    sharr = shingle_array(F.col(name_col), k)
-    sig = F.array(
-        *[F.array_min(F.transform(sharr, _hash_with_seed(i))) for i in range(num_hashes)]
+    return F.array(
+        *[F.array_min(F.transform(shingle_arr, _hash_with_seed(i))) for i in range(num_hashes)]
     )
-    return names.select(F.col(name_col).alias("name"), sig.alias("sig"))
 
 
 def minhash_signatures(sh: DataFrame, name_col: str = "name", num_hashes: int = 16) -> DataFrame:
@@ -89,6 +95,17 @@ def minhash_signatures(sh: DataFrame, name_col: str = "name", num_hashes: int = 
     aggs = [F.min(_mh_hash(F.col("shingle"), s)).alias(f"h{s}") for s in range(num_hashes)]
     sig = sh.groupBy(name_col).agg(*aggs)
     return sig.select(name_col, F.array(*[F.col(f"h{s}") for s in range(num_hashes)]).alias("sig"))
+
+
+def band_buckets(sig, bands: int):
+    """Column expr: the LSH bucket of each band of a signature column,
+    array<int> indexed by band id — hash(band_id, the band's slots as a
+    string). Names sharing a (band_id, bucket) are candidates."""
+    rows_per_band = F.floor(F.size(sig) / bands).cast("int")
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(bands - 1)),
+        lambda b: F.hash(b, F.slice(sig, b * rows_per_band + 1, rows_per_band).cast("string")),
+    )
 
 
 def lsh_candidate_pairs(
@@ -130,28 +147,27 @@ def lsh_candidate_pairs(
     safety margin below threshold*num_hashes drops the bulk of the
     0.5-0.7-similar candidate mass (numeric-suffix identifier families)
     while passing true >=threshold pairs with probability ~1."""
-    sig = sig.withColumn("_n", F.size("sig"))
-    rows_per_band = F.floor(F.col("_n") / bands).cast("int")
-    proj = [F.col(name_col).alias("name")] + ([F.col("sig")] if min_agree is not None else [])
     banded = sig.select(
-        *proj,
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band),
-            )
-        ).alias("band_id", "band"),
-    ).withColumn("bucket", F.hash("band_id", F.col("band").cast("string")))
+        F.col(name_col).alias("name"), "sig", band_buckets(F.col("sig"), bands).alias("buckets")
+    )
+    return _bucket_pairs(banded, max_bucket, min_agree)
+
+
+def _bucket_pairs(banded: DataFrame, max_bucket: int, min_agree: int | None) -> DataFrame:
+    """(name, sig, buckets) -> distinct capped LSH candidate pairs (a, b),
+    a < b: the distributed grouping of lsh_candidate_pairs."""
+    proj = ["name"] + (["sig"] if min_agree is not None else [])
+    exploded = banded.select(*proj, F.posexplode("buckets").alias("band_id", "bucket"))
     w = Window.partitionBy("band_id", "bucket").orderBy(F.xxhash64("name"), "name")
-    carry = ["band_id", "bucket", "name"] + (["sig"] if min_agree is not None else [])
-    # checkpointed for the same both-sides-of-the-self-join reason as in
-    # deletion_candidate_pairs; LAZY so it materializes inside the edges
-    # job instead of as its own serialized blocking action (the RDD cache
-    # still computes it once and shares it across both join sides)
+    # checkpointed because both sides of the self-join read it. Under AQE
+    # localCheckpoint(eager=False) still runs the plan's shuffle stages
+    # (here the window's exchange) when it is called; only the final
+    # stage is deferred to the first consuming job, which computes it once
+    # for both join sides
     capped = (
-        banded.withColumn("_rn", F.row_number().over(w))
+        exploded.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= max_bucket)
-        .select(*carry)
+        .select("band_id", "bucket", *proj)
         .localCheckpoint(eager=False)
     )
     left = capped.withColumnRenamed("name", "a").withColumnRenamed("sig", "sig_a")
@@ -163,14 +179,35 @@ def lsh_candidate_pairs(
     return joined.select("a", "b").distinct()
 
 
-def deletion_candidate_pairs(
-    names: DataFrame, name_col: str = "name", k: int = 3,
-    threshold: float = 0.9,
-) -> DataFrame:
-    """Deletion-neighborhood blocking (SymSpell-style) for SHORT names —
-    candidate pairs whose transitive closure EXACTLY reproduces the
-    >=threshold near-dup components (the only downstream consumer is
-    connected components; individual non-star edges are not needed).
+def deletion_keys(sh, threshold: float = 0.9):
+    """Column expr: the deletion-neighborhood keys of a SORTED distinct
+    shingle-set column, array<long>: position 0 hashes the full set,
+    position i > 0 the set minus its i-th element.
+
+    Size cut: a (full A, B minus one) match implies J = (m-1)/m for
+    |B| = m, which reaches `threshold` only when m >= 1/(1-threshold) (10
+    at 0.9), so sets of fewer shingles get ONLY their full key (1 key
+    instead of n+1; they can still match as the full side of a larger
+    name's deletion key, and as identical sets). This shrinks the exploded
+    key table ~4x on an identifier vocabulary dominated by very short
+    names. The set must be sorted and distinct: the exact verify is SET
+    Jaccard, and hashing a multiset would lose pairs that differ only in a
+    duplicated occurrence (set-J 1.0 but different full keys) and break
+    the (m-1)/m bound."""
+    min_del = math.ceil(1.0 / (1.0 - threshold)) if threshold < 1 else 10**9
+    n = F.size(sh)
+    return F.transform(
+        F.sequence(F.lit(0), F.when(n >= min_del, n).otherwise(F.lit(0))),
+        lambda i: F.xxhash64(F.concat_ws("\x01", F.filter(sh, lambda x, j: j != i - 1))),
+    )
+
+
+def _star_pairs(keys: DataFrame) -> DataFrame:
+    """(name, keys) -> distinct (a, b), a < b: deletion-neighborhood
+    blocking (SymSpell-style) for SHORT names, whose candidate pairs'
+    transitive closure EXACTLY reproduces the >=threshold near-dup
+    components (the only downstream consumer is connected components;
+    individual non-star edges are not needed). `keys` is deletion_keys.
 
     Why exact: if both names have <= ~18 distinct shingles, J(A,B) >=
     0.9 forces |A Δ B| <= 1 ((n+m)(1-J)/(1+J) < 2), i.e. the two shingle
@@ -188,52 +225,26 @@ def deletion_candidate_pairs(
 
     Pair generation is a STAR per key, not a quadratic bucket join: all
     full-key members of a key have the SAME shingle set (pairwise J = 1),
-    so pairing every member of the key (either kind) with one
-    deterministic full-side representative preserves every component
-    reachable through that key — linear output per bucket, no cap, no
-    recall cliff on mega-families, and no row_number window (the former
-    per-bucket sort was a profiled hotspot). Keys with no full-side
-    member emit nothing (minus-one x minus-one can't reach threshold).
-
-    A second size cut: the (full A, B minus one) match implies J =
-    (m-1)/m for |B| = m, which reaches `threshold` only when
-    m >= 1/(1-threshold) (10 at 0.9) — so names with fewer shingles emit
-    ONLY their full-set key (1 key instead of n+1; they can still match
-    as the full side of a larger name's deletion key, and as identical
-    sets). This shrinks the exploded key table ~4x on an identifier
-    vocabulary dominated by very short names.
+    so pairing every member of the key (either kind) with the min
+    full-side member preserves every component reachable through that
+    key — linear output per bucket, no cap, no recall cliff on
+    mega-families, and no row_number window (the former per-bucket sort
+    was a profiled hotspot). Keys with no full-side member emit nothing
+    (minus-one x minus-one can't reach threshold). The one-task path
+    (_resolve_hashed) groups the same keys by the same rule.
 
     Cost: <= (n+1) keys per name (n = shingle count, <= ~19), one
     explode + one partial-agg (min) + one equi-join on key; a hot key is
     one skewed join key, which AQE splits."""
-    import math
-
-    min_del = math.ceil(1.0 / (1.0 - threshold)) if threshold < 1 else 10**9
-    # DISTINCT before sort: the exact verify (jaccard_inline) is set
-    # Jaccard, so keys must hash the shingle SET — hashing the multiset
-    # loses pairs that differ only in a duplicated occurrence (set-J 1.0
-    # but different full keys) and breaks the (m-1)/m size bound
-    arr = F.array_sort(F.array_distinct(shingle_array(F.col(name_col), k)))
     # kind 0 = hash of the full shingle set, kind 1 = minus-one-element
-    keyed = names.select(F.col(name_col).alias("name"), arr.alias("sh")).select(
-        "name",
-        F.posexplode(
-            F.transform(
-                F.sequence(
-                    F.lit(0),
-                    F.when(F.size("sh") >= min_del, F.size("sh")).otherwise(F.lit(0)),
-                ),
-                lambda i: F.xxhash64(
-                    F.concat_ws("\x01", F.filter(F.col("sh"), lambda x, j: j != i - 1))
-                ),
-            )
-        ).alias("kind_pos", "key"),
-    ).withColumn("kind", F.least(F.col("kind_pos"), F.lit(1))).drop("kind_pos")
-    # checkpoint before the agg + join: both consumers scan the same
-    # checkpointed table instead of re-executing the key-explode lineage
-    # (the table is ~(n_shingles+1) longs per name — small). LAZY: it
-    # materializes within the first consuming job rather than as its own
-    # serialized driver action
+    keyed = keys.select("name", F.posexplode("keys").alias("kind_pos", "key")).select(
+        "name", "key", F.least(F.col("kind_pos"), F.lit(1)).alias("kind")
+    )
+    # checkpoint before the agg + join: both consumers scan the same table
+    # (~(n_shingles+1) longs per name — small) instead of re-executing the
+    # key-explode lineage. Over a checkpointed name table the plan has no
+    # shuffle, so the call runs no job; the first consuming job
+    # materializes it
     keyed = keyed.localCheckpoint(eager=False)
     reps = (
         keyed.filter(F.col("kind") == 0)
@@ -317,8 +328,9 @@ def _small_star(e: DataFrame) -> DataFrame:
 
 def _uf_batches(batches):
     """Union-find (union-by-min-label + path compression) over an iterator
-    of pandas batches of (a, b) edges -> (parent dict, find fn). Shared by
-    the single-task finisher and the per-partition forest stage; the final
+    of batches of (a, b) edge columns (pandas frames or dicts of lists) ->
+    (parent dict, find fn). Shared by the single-task finisher, the
+    per-partition forest stage and the one-task canonicalization; the final
     root of every component is its min label regardless of edge order."""
     parent: dict = {}
 
@@ -580,6 +592,190 @@ def connected_components(
     return labels
 
 
+# Distinct names up to which canonicalize_names resolves the whole table in
+# ONE task (`_canonicalize_local`) instead of the distributed path. The
+# limit is the one task's memory: it holds the whole hashed table and its
+# candidate frames in one Python worker. `_resolve_hashed` alone, run on
+# the hashed projection of identifier-like name tables with ~10%
+# near-duplicate variants (standalone process, 4-vCPU host): peak RSS
+# 165 / 237 / 369 / 687 MB and 0.2 / 0.5 / 1.7 / 5.1 s at 20k / 50k /
+# 100k / 200k names. 50k is the largest measured size whose peak stays
+# well inside Spark's default 384 MiB executor memory overhead, which is
+# where a cluster manager accounts a Python worker's memory. Speed does
+# not set it: at local[4] the one task beat the distributed path at every
+# size measured (median of 3, distinct + routing count included: 5k 1.9
+# vs 5.9 s, 50k 4.3 vs 19.1 s, 200k 18.8 vs 77.2 s, identical rows), so
+# no crossover is known. That the distributed path is the better choice
+# above the budget is unverified: no benchmark workload has a name table
+# that large (the refresh's is ~3k names).
+SINGLE_TASK_BUDGET = 50_000
+
+
+def _min_agree(threshold: float, num_hashes: int) -> int:
+    """The minhash-agreement prefilter a 0.25-wide safety margin below the
+    verify threshold: P(drop | true J >= threshold) ~ 0.3% at 16 hashes,
+    while most sub-0.7 candidate mass dies before the exact verify (see
+    lsh_candidate_pairs)."""
+    return math.ceil(max(0.0, threshold - 0.25) * num_hashes)
+
+
+def _hashed_names(
+    names: DataFrame, k: int, num_hashes: int, bands: int, threshold: float
+) -> DataFrame:
+    """(name) -> (name, sh, keys, sig, buckets): the ONE narrow JVM
+    projection of every hash that candidate generation groups on; the
+    single-task and distributed paths differ only in how they group it.
+
+    - sh: the sorted distinct shingle set (what the exact verify compares);
+    - keys: deletion-neighborhood keys (deletion_keys), for names with
+      <= B shingles, B = ceil((1+thr)/(1-thr)) - 1 (18 at thr=0.9); NULL
+      for longer names;
+    - sig, buckets: MinHash signature and its LSH band buckets, for names
+      with >= B-1 shingles (the long subset starts at B-1 so that a pair
+      straddling the boundary is seen by the LSH path too); NULL below."""
+    max_short = max(2, math.ceil((1 + threshold) / (1 - threshold)) - 1) if threshold < 1 else 64
+    sets = names.select("name", F.array_sort(shingle_array(F.col("name"), k)).alias("sh"))
+    n_sh = F.size("sh")
+    hashed = sets.select(
+        "name",
+        "sh",
+        F.when(n_sh <= max_short, deletion_keys(F.col("sh"), threshold)).alias("keys"),
+        F.when(n_sh >= max_short - 1, minhash_sig(F.col("sh"), num_hashes)).alias("sig"),
+    )
+    return hashed.select(
+        "*", F.when(F.col("sig").isNotNull(), band_buckets(F.col("sig"), bands)).alias("buckets")
+    )
+
+
+def _canonicalize_distributed(
+    names: DataFrame, k: int, num_hashes: int, bands: int, threshold: float,
+    max_iters: int, max_bucket: int,
+) -> DataFrame:
+    """Distinct (name) table -> (name, canonical) with every step a Spark
+    operator: the deletion-key star join, the capped LSH bucket self-join,
+    the exact verify (jaccard_inline) and connected_components. For name
+    tables above SINGLE_TASK_BUDGET."""
+    hashed = _hashed_names(names, k, num_hashes, bands, threshold)
+    pairs_short = _star_pairs(hashed.where(F.col("keys").isNotNull()))
+    pairs_long = _bucket_pairs(
+        hashed.where(F.col("buckets").isNotNull()), max_bucket, _min_agree(threshold, num_hashes)
+    )
+    pairs = pairs_short.union(pairs_long).distinct()
+    # checkpointed before connected_components, whose own actions would
+    # otherwise each re-run the candidate DAG. Under AQE the call runs that
+    # DAG's shuffle stages; the final verify stage is deferred to the
+    # first consuming job
+    edges = jaccard_inline(pairs, k, threshold).localCheckpoint(eager=False)
+    # CC over edge members only; names with no near-duplicate are identity
+    # and are NOT returned — callers coalesce(canonical, name)
+    comp = connected_components(edges, nodes=None, name_col="name", max_iters=max_iters)
+    return comp.withColumnRenamed("component", "canonical")
+
+
+def _list_rows(arr):
+    """A list<T> Arrow array -> (row, pos, value) numpy arrays, one entry
+    per list element: its row, its position in the row's list and its
+    value (NULL lists contribute nothing)."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    row = pc.list_parent_indices(arr).to_numpy(zero_copy_only=False)
+    first = np.ones(len(row), dtype=bool)
+    first[1:] = row[1:] != row[:-1]
+    starts = np.flatnonzero(first)
+    pos = np.arange(len(row)) - starts[np.cumsum(first) - 1]
+    return row, pos, arr.flatten().to_numpy(zero_copy_only=False)
+
+
+def _resolve_hashed(t, threshold: float, max_bucket: int, min_agree: int):
+    """One task's canonicalization of a whole _hashed_names table (plus
+    `ord` = xxhash64(name)) as a pyarrow Table -> RecordBatch (name,
+    canonical), row-identical to _canonicalize_distributed.
+
+    Names are sorted once (Arrow's binary string order, which is Spark's),
+    so a row index is the name's rank and every min/compare over names is
+    one over ints. Each grouping is vectorized with pandas/numpy:
+    - deletion star: per key, the min row among full-key (position 0)
+      members is the representative; every other member pairs with it;
+    - LSH: per (band, bucket), members ordered by (ord, name) and capped at
+      max_bucket, then a self-merge of the non-singleton buckets and the
+      signature-agreement prefilter on a signature matrix;
+    then the exact set-Jaccard verify over the distinct candidate pairs and
+    union-find (_uf_batches: component = min member)."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    t = t.take(pc.sort_indices(t, [("name", "ascending")]))
+    row, pos, key = _list_rows(t.column("keys").combine_chunks())
+    keyed = pd.DataFrame({"key": key, "row": row})
+    rep = keyed[pos == 0].groupby("key")["row"].min().rename("rep")
+    keyed = keyed.join(rep, on="key", how="inner")
+    keyed = keyed[keyed["row"] != keyed["rep"]]
+    a = [np.minimum(keyed["row"], keyed["rep"]).to_numpy()]
+    b = [np.maximum(keyed["row"], keyed["rep"]).to_numpy()]
+
+    row, band, bucket = _list_rows(t.column("buckets").combine_chunks())
+    ords = t.column("ord").to_numpy()
+    banded = pd.DataFrame({"band": band, "bucket": bucket, "ord": ords[row], "row": row})
+    banded = banded.sort_values(["band", "bucket", "ord", "row"])
+    banded = banded[banded.groupby(["band", "bucket"]).cumcount() < max_bucket]
+    banded = banded[banded.duplicated(["band", "bucket"], keep=False)]
+    if len(banded):
+        pairs = banded.merge(banded, on=["band", "bucket"])
+        pairs = pairs[pairs["row_x"] < pairs["row_y"]]
+        ra, rb = pairs["row_x"].to_numpy(), pairs["row_y"].to_numpy()
+        srow, spos, sval = _list_rows(t.column("sig").combine_chunks())
+        sig = np.zeros((t.num_rows, int(spos.max()) + 1), dtype=np.int64)
+        sig[srow, spos] = sval
+        agree = (sig[ra] == sig[rb]).sum(axis=1) >= min_agree
+        a.append(ra[agree])
+        b.append(rb[agree])
+
+    cand = np.unique(np.stack([np.concatenate(a), np.concatenate(b)], axis=1), axis=0)
+    ids = np.unique(cand)
+    sets = dict(zip(ids.tolist(), map(frozenset, t.column("sh").take(ids).to_pylist())))
+    ea, eb = [], []
+    for x, y in cand.tolist():
+        sx, sy = sets[x], sets[y]
+        inter = len(sx & sy)
+        if inter / (len(sx) + len(sy) - inter) >= threshold:
+            ea.append(x)
+            eb.append(y)
+    parent, find = _uf_batches([{"a": ea, "b": eb}])
+    members = list(parent)
+    names = t.column("name").combine_chunks()
+    return pa.RecordBatch.from_arrays(
+        [names.take(pa.array(members, pa.int64())),
+         names.take(pa.array([find(x) for x in members], pa.int64()))],
+        names=["name", "canonical"],
+    )
+
+
+def _canonicalize_local(
+    names: DataFrame, k: int, num_hashes: int, bands: int, threshold: float,
+    max_bucket: int,
+) -> DataFrame:
+    """Distinct (name) table -> (name, canonical) in ONE Arrow task over
+    the _hashed_names projection: the same hashes as the distributed path,
+    grouped in the task (_resolve_hashed) instead of by shuffles, so a
+    small table costs one job instead of a dozen."""
+    import pyarrow as pa
+
+    min_agree = _min_agree(threshold, num_hashes)
+    hashed = _hashed_names(names, k, num_hashes, bands, threshold).select(
+        "*", F.xxhash64("name").alias("ord")
+    )
+
+    def resolve(batches):
+        batches = list(batches)
+        if batches:
+            yield _resolve_hashed(pa.Table.from_batches(batches), threshold, max_bucket, min_agree)
+
+    return hashed.coalesce(1).mapInArrow(resolve, "name string, canonical string")
+
+
 def canonicalize_names(
     names: DataFrame,
     name_col: str = "name",
@@ -590,71 +786,53 @@ def canonicalize_names(
     max_iters: int = 20,
     max_bucket: int = 64,
 ) -> DataFrame:
-    """(name) distinct -> (name, canonical). Names in the same near-duplicate
-    component share the lexicographically smallest member as canonical.
+    """(name) -> (name, canonical). Names in the same near-duplicate
+    component share the lexicographically smallest member as canonical;
+    names with no near-duplicate are not returned.
 
     Candidate generation is routed by shingle count (profiled on 200k-name
-    tables; see deletion_candidate_pairs):
-    - names with <= B shingles, B = ceil((1+thr)/(1-thr)) - 1 (18 at
-      thr=0.9): deletion-neighborhood blocking — EXACT at the threshold,
-      no minhash;
-    - longer names (a small tail for identifier vocabularies): the
-      MinHash-LSH banding path with the signature-agreement prefilter.
-      The long subset starts at B-1 so cross-boundary pairs (one name just
-      under B shingles, one just over) are seen by the LSH path too.
-    The union is verified by exact Jaccard and materialized eagerly ONCE
-    before connected components (whose own eager checkpoints would
-    otherwise recompute the whole candidate DAG per action)."""
-    import math
+    tables; see _star_pairs and _hashed_names): short names
+    by deletion-neighborhood blocking — EXACT at the threshold, no
+    minhash — and the long tail by MinHash-LSH banding with the
+    signature-agreement prefilter. Candidates are verified by exact
+    Jaccard and closed by connected components.
 
+    Size-adaptive, like connected_components: one count of the distinct
+    name table picks the physical path.
+    - <= SINGLE_TASK_BUDGET names: one Arrow task (_canonicalize_local).
+      The distributed path's cost at this size is its fixed per-job work:
+      compute_canon_map over a refresh's 3,170 distinct norms measured 16
+      Spark jobs and 1.8-2.2 s on it, against 5 jobs and 0.75-0.9 s for
+      the one task.
+    - above: the distributed path (_canonicalize_distributed), which
+      spreads the table over many tasks so that no one task must hold it
+      (see SINGLE_TASK_BUDGET for how the budget was set).
+    Both paths group the same _hashed_names projection and return the same
+    rows (tests/test_canonicalize.py pins them against each other)."""
     # ONE materialization of the distinct name table: every consumer below
-    # (the short/long routing filters and both sides of each candidate
-    # self-join) would otherwise re-execute the full upstream lineage —
-    # scan + distinct shuffle + interpreted shingle expressions — per use
-    # (profiled: the recompute amplification, not the candidate math, was
-    # the dominant cost of the whole graph phase). The distinct-name table
-    # is orders of magnitude smaller than the mention stream, so the
-    # checkpoint is cheap; on a cluster this is a persisted dataset.
-    #
-    # Explicit repartition to the cluster's parallelism BEFORE the
-    # checkpoint: AQE coalesces the distinct's output to ONE partition
-    # (the table is a few MB), which would serialize every downstream
-    # interpreted expression — shingle arrays, deletion keys, minhash
-    # signatures — onto a single core (profiled: the whole candidate
-    # phase ran 1-partition serial and therefore did not speed up from
-    # local[2] to local[8]). AQE does not re-coalesce a user-specified
-    # repartition, so the candidate compute fans out across the cluster
-    # while the shuffles stay tiny.
-    # LAZY checkpoint: the whole candidate DAG (short + long branches) is
-    # one union materialized by the edge-count action inside
-    # connected_components, so the names table computes exactly once
-    # within that job and is cached for every later consumer — without
-    # spending a serialized blocking action per checkpoint here (profiled:
-    # the graph phase's flat ~25s tail at high parallelism was mostly
-    # these fixed-cost driver round-trips, the very thing that caps the
-    # N->4N efficiency).
-    par = names.sparkSession.sparkContext.defaultParallelism
+    # (the routing count, the short/long filters and both sides of each
+    # candidate self-join) would otherwise re-execute the full upstream
+    # lineage — scan + distinct shuffle + interpreted shingle expressions —
+    # per use (profiled: the recompute amplification, not the candidate
+    # math, was the dominant cost of the whole graph phase). NULL names
+    # never match anything, so they are dropped here. Under AQE the call
+    # runs the distinct's shuffle; the routing count computes the
+    # checkpointed partitions, which the chosen path reuses.
     names = (
         names.select(F.col(name_col).alias("name"))
+        .where(F.col("name").isNotNull())
         .distinct()
-        .repartition(par)
         .localCheckpoint(eager=False)
     )
-    n_sh = F.size(F.array_distinct(shingle_array(F.col("name"), k)))
-    max_short = max(2, math.ceil((1 + threshold) / (1 - threshold)) - 1) if threshold < 1 else 64
-    short = names.filter(n_sh <= max_short)
-    long_tail = names.filter(n_sh >= max_short - 1)
-    pairs_short = deletion_candidate_pairs(short, "name", k, threshold=threshold)
-    sig = inline_signatures(long_tail, "name", k, num_hashes)
-    # minhash-agreement prefilter a 0.25-wide safety margin below the
-    # verify threshold: P(drop | true J >= threshold) ~ 0.3% at 16 hashes,
-    # while most sub-0.7 candidate mass dies before the expensive exact
-    # verify (see lsh_candidate_pairs)
-    min_agree = math.ceil(max(0.0, threshold - 0.25) * num_hashes)
-    pairs_long = lsh_candidate_pairs(sig, "name", bands, max_bucket, min_agree=min_agree)
-    pairs = pairs_short.union(pairs_long).distinct()
-    edges = jaccard_inline(pairs, k, threshold).localCheckpoint(eager=False)
-    # CC over edge members only; names with no near-duplicate are identity
-    # and are NOT returned — callers coalesce(canonical, name)
-    comp = connected_components(edges, nodes=None, name_col="name", max_iters=max_iters)
-    return comp.withColumnRenamed("component", "canonical")
+    if names.count() <= SINGLE_TASK_BUDGET:
+        return _canonicalize_local(names, k, num_hashes, bands, threshold, max_bucket)
+    # Explicit repartition to the cluster's parallelism: AQE coalesces the
+    # distinct's output to ONE partition (the table is a few MB), which
+    # would serialize every interpreted expression of the distributed path
+    # — shingle arrays, deletion keys, minhash signatures — onto a single
+    # core (profiled: the whole candidate phase ran 1-partition serial and
+    # therefore did not speed up from local[2] to local[8]). AQE does not
+    # re-coalesce a user-specified repartition.
+    par = names.sparkSession.sparkContext.defaultParallelism
+    names = names.repartition(par).localCheckpoint(eager=False)
+    return _canonicalize_distributed(names, k, num_hashes, bands, threshold, max_iters, max_bucket)

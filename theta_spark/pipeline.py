@@ -158,24 +158,11 @@ def canonical_triples(triples: DataFrame, canon: DataFrame) -> DataFrame:
     )
 
 
-def build_nodes_edges(
-    triples: DataFrame,
-    mentions: DataFrame,
-    cfg: PipelineConfig | None = None,
-    canon: DataFrame | None = None,
-):
-    """Materialize graph tables. Node mention-counts use a two-phase salted
-    aggregation so a hot entity (e.g. a util called from 20% of files) cannot
-    straddle one reducer (SURVEY.md §4.2 skew row).
-
-    Canonicalization: distinct mention norms -> (name, canonical) via
-    MinHash-LSH + connected components (precomputed map accepted via
-    `canon`); triples re-keyed to canonical ids.
-    """
-    cfg = cfg or PipelineConfig()
-    if canon is None:
-        canon = compute_canon_map(mentions, cfg)
-
+def build_nodes(mentions: DataFrame, canon: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """(canonical, category, n_mentions, n_doc_parts) over the mentions
+    re-keyed through the canonical map. Node mention-counts use a two-phase
+    salted aggregation so a hot entity (e.g. a util called from 20% of
+    files) cannot straddle one reducer (SURVEY.md §4.2 skew row)."""
     canon_b = F.broadcast(canon)  # distinct entity names << mentions
     m = mentions.join(canon_b.withColumnRenamed("name", "norm"), on="norm", how="left").withColumn(
         "canonical", F.coalesce("canonical", "norm")
@@ -186,13 +173,33 @@ def build_nodes_edges(
     partial = salted.groupBy("canonical", "category", "salt").agg(
         F.count(F.lit(1)).alias("cnt"), F.countDistinct("doc_id").alias("docs_part")
     )
-    nodes = partial.groupBy("canonical", "category").agg(
+    return partial.groupBy("canonical", "category").agg(
         F.sum("cnt").alias("n_mentions"), F.sum("docs_part").alias("n_doc_parts")
     )
 
+
+def edge_counts(t: DataFrame) -> DataFrame:
+    """Canonical triple stream -> (subj, pred, obj, n_docs) edges."""
+    return t.groupBy("subj", "pred", "obj").agg(F.count(F.lit(1)).alias("n_docs"))
+
+
+def build_nodes_edges(
+    triples: DataFrame,
+    mentions: DataFrame,
+    cfg: PipelineConfig | None = None,
+    canon: DataFrame | None = None,
+):
+    """Materialize graph tables: (nodes, edges, canonical triples).
+
+    Canonicalization: distinct mention norms -> (name, canonical) via
+    MinHash-LSH + connected components (precomputed map accepted via
+    `canon`); triples re-keyed to canonical ids.
+    """
+    cfg = cfg or PipelineConfig()
+    if canon is None:
+        canon = compute_canon_map(mentions, cfg)
     t = canonical_triples(triples, canon)
-    edges = t.groupBy("subj", "pred", "obj").agg(F.count(F.lit(1)).alias("n_docs"))
-    return nodes, edges, t
+    return build_nodes(mentions, canon, cfg), edge_counts(t), t
 
 
 # ------------------------------------------------------------ lineage/resume
@@ -550,38 +557,6 @@ def _doc_changes(keys: DataFrame, prior_keys: DataFrame) -> DataFrame:
     )
 
 
-def corpus_delta(docs: DataFrame, prior_stage: DataFrame, prior_keys: DataFrame | None = None):
-    """Split a keyed corpus against a prior stage snapshot by the
-    (doc_id, sha256) content invariant.
-
-    Returns (reused_rows, delta_docs):
-    - reused_rows: prior-stage rows of documents whose content keys are
-      unchanged — safe to carry over without recomputation;
-    - delta_docs: every current version of a document whose key set
-      changed (a new doc, changed content, or a version added or
-      removed; see _doc_changes) — the only docs that need re-scoring.
-    Docs deleted from the corpus fall out of both sides.
-
-    The detection is key-only (two narrow string columns): one aggregate
-    over (doc_id, sha256) pairs and a doc_id semi-join — at 10^12-file
-    scale it costs one shuffle of key pairs, nothing proportional to
-    content size, and the expensive Arrow scoring stage runs ONLY on the
-    delta (the whole point: a daily commit touches a fraction of files).
-
-    `prior_keys` should be the prior run's scored_docs REGISTRY (every
-    doc that was scored, including zero-yield ones); when omitted it
-    falls back to the keys present in prior_stage's rows — which
-    re-extracts zero-yield docs on every incremental run, since a doc
-    that legitimately produced no rows is absent from a row-bearing
-    stage (judge r3 finding)."""
-    if prior_keys is None:
-        prior_keys = prior_stage.select("doc_id", "sha256").distinct()
-    changed = _doc_changes(docs.select("doc_id", "sha256"), prior_keys)
-    reused = prior_stage.join(changed, "doc_id", "left_anti")
-    delta_docs = docs.join(changed.where(F.col("cur")).select("doc_id"), "doc_id", "left_semi")
-    return reused, delta_docs
-
-
 def _check_prior_config(prior: str, cfg_fp: str) -> None:
     """Fail FAST on config drift (ADVICE r3): a prior run scored under a
     different head/segmentation would otherwise surface as a late
@@ -629,15 +604,23 @@ def _check_prior_config(prior: str, cfg_fp: str) -> None:
 
 def _once(make: "callable") -> "callable":
     """A getter for make()'s result, computed at most once — also when
-    several commit threads ask for it at the same time."""
+    several commit threads ask for it at the same time. A failure is
+    memoized too: make() is not re-run, and every caller gets its
+    exception."""
     lock = threading.Lock()
     memo: list = []
 
     def get():
         with lock:
             if not memo:
-                memo.append(make())
-            return memo[0]
+                try:
+                    memo.append((make(), None))
+                except Exception as e:
+                    memo.append((None, e))
+            value, error = memo[0]
+        if error is not None:
+            raise error
+        return value
 
     return get
 
@@ -683,6 +666,11 @@ class Increment:
             lambda: _doc_changes(self.keys(), self._prior_keys()).localCheckpoint(eager=True)
         )
         self.scored = _once(self._score)
+        # the row stages, committed once each: the graph-layer batch runs
+        # them as two of its commits, and every other commit waits only
+        # on the one it reads (canonicalization on mentions)
+        self.mentions = _once(lambda: self._commit_rows("mentions", doc_mentions))
+        self.triples = _once(lambda: self._commit_rows("triples", doc_triples))
 
     def _prior_keys(self) -> DataFrame:
         if self.registry is not None:
@@ -691,15 +679,13 @@ class Increment:
 
     def _score(self) -> DataFrame:
         # the changed docs (every doc of a full build) scored ONCE; each
-        # row stage commits a projection of it. The split runs on the
-        # materialized keys, so only the final semi-join scans the corpus
-        # content again, to fetch the delta docs' text.
+        # row stage commits a projection of it. Against a prior, every
+        # current version of a changed doc_id (redo) is re-extracted: the
+        # change table is materialized once, so only this semi-join scans
+        # the corpus content again, to fetch the delta docs' text.
         docs = self.docs
         if self.prior is not None:
-            _, delta_keys = corpus_delta(
-                self.keys(), read_stage(self.spark, self.prior, "mentions"), prior_keys=self.registry
-            )
-            docs = docs.join(delta_keys, ["doc_id", "sha256"], "left_semi")
+            docs = docs.join(self.redo(), "doc_id", "left_semi")
         return extract_docs(docs, self.cfg).localCheckpoint(eager=True)
 
     def retired(self) -> DataFrame:
@@ -711,18 +697,17 @@ class Increment:
         """doc_ids re-extracted by this refresh."""
         return self.changes().where(F.col("cur")).select("doc_id")
 
+    def _commit_rows(self, stage: str, project) -> DataFrame:
+        return run_checkpointed_delta(
+            self.spark, self.workdir, stage, lambda: project(self.scored()), self.retired,
+            self.prior, resume=self.resume, extra_manifest={"config": self.cfg_fp},
+            max_chain=self.cfg.delta_max_chain,
+        )
+
     def commit_extraction(self):
         """Commit `mentions` and `triples`, both projections of the ONE
         scoring pass. Returns (mentions, triples), resolved."""
-
-        def commit(stage: str, project) -> DataFrame:
-            return run_checkpointed_delta(
-                self.spark, self.workdir, stage, lambda: project(self.scored()), self.retired,
-                self.prior, resume=self.resume, extra_manifest={"config": self.cfg_fp},
-                max_chain=self.cfg.delta_max_chain,
-            )
-
-        return commit("mentions", doc_mentions), commit("triples", doc_triples)
+        return self.mentions(), self.triples()
 
     def commit_scored_docs(self) -> DataFrame:
         """The scored-docs registry: every (doc_id, sha256) scored —
@@ -776,20 +761,24 @@ class Increment:
 def _commit_graph_layer(
     spark: SparkSession,
     workdir: str,
-    triples: DataFrame,
-    mentions: DataFrame,
+    triples: "callable",
+    mentions: "callable",
     cfg: PipelineConfig,
     resume: bool,
     inc: Increment | None = None,
 ):
     """Commit the graph-layer stages as ONE batch of concurrent commits:
     nodes, canon_map, edge_provenance and edges, plus — for a pipeline
-    run (`inc`) — its scored_docs registry and, against a prior, its
-    delta_stats. The graph tail is dominated by fixed per-commit costs
-    (write-job latency, lineage aggregate, small shuffles on an otherwise
-    idle cluster), so the commit walls overlap instead of adding. The
-    builders share one canonical map: the first thread that needs it
-    materializes it (its eager checkpoint) once.
+    run (`inc`) — its mentions and triples commits, its scored_docs
+    registry and, against a prior, its delta_stats. `triples` and
+    `mentions` are no-argument getters of the resolved row streams (in a
+    pipeline run, inc's memoized commits). The tail is dominated by fixed
+    per-commit costs (write-job latency, lineage aggregate, small shuffles
+    on an otherwise idle cluster), so the commit walls overlap instead of
+    adding. Each commit waits only on what it reads: the canonical map
+    (materialized once, by the first thread that needs it) on mentions, so
+    the triples, scored_docs and delta_stats commits run alongside the
+    mentions -> canon_map -> nodes chain.
 
     nodes partitioned by category, edges by predicate (north rule:
     partitioned node/edge tables — Iceberg partition spec on a cluster,
@@ -818,18 +807,13 @@ def _commit_graph_layer(
     resolved streams — recomputed, but their outputs are orders of
     magnitude smaller."""
     prior = inc.prior if inc is not None else None
-
-    @_once
-    def _parts():
-        canon = compute_canon_map(mentions, cfg)
-        n, _, t = build_nodes_edges(triples, mentions, cfg, canon=canon)
-        # `t` is the lazy canonical-keyed stream: the edges aggregate and,
-        # in a full build, the edge_provenance write consume it
-        # concurrently (same plan, two independent jobs — the aggregate
-        # re-runs the cheap broadcast-canon join instead of waiting for
-        # the snapshot write, taking the edges wall off the tail's
-        # critical path)
-        return {"canon": canon, "n": n, "t": t}
+    canon = _once(lambda: compute_canon_map(mentions(), cfg))
+    # the lazy canonical-keyed stream: the edges aggregate and, in a full
+    # build, the edge_provenance write consume it concurrently (same plan,
+    # two independent jobs — the aggregate re-runs the cheap
+    # broadcast-canon join instead of waiting for the snapshot write,
+    # taking the edges wall off the tail's critical path)
+    canonical = _once(lambda: canonical_triples(triples(), canon()))
 
     def _prov_layout():
         # Write layout for the biggest snapshot (one row per triple
@@ -842,8 +826,7 @@ def _commit_graph_layer(
         # parquet encoding. Measured ~2x faster than the plain write at
         # 200k docs under zstd; the salt keeps a hot predicate spread
         # across writers.
-        t = _parts()["t"]
-        return t.repartition(
+        return canonical().repartition(
             F.col("pred"), F.pmod(F.xxhash64("doc_id"), F.lit(16))
         ).sortWithinPartitions("pred", "subj", "obj")
 
@@ -859,17 +842,17 @@ def _commit_graph_layer(
         changed_names = (
             read_stage(spark, prior, "canon_map").withColumnRenamed("canonical", "c_old")
             .join(
-                _parts()["canon"].withColumnRenamed("canonical", "c_new"),
+                canon().withColumnRenamed("canonical", "c_new"),
                 on="name",
                 how="full_outer",
             )
             .where(F.coalesce("c_old", "name") != F.coalesce("c_new", "name"))
             .select("name")
         )
-        by_subj = triples.join(
+        by_subj = triples().join(
             F.broadcast(changed_names.withColumnRenamed("name", "subj")), "subj", "left_semi"
         ).select("doc_id")
-        by_obj = triples.join(
+        by_obj = triples().join(
             F.broadcast(changed_names.withColumnRenamed("name", "obj")), "obj", "left_semi"
         ).select("doc_id")
         return by_subj.unionByName(by_obj).distinct().localCheckpoint(eager=True)
@@ -882,26 +865,25 @@ def _commit_graph_layer(
                 "against a run that committed canon_map, or re-run full"
             )
         redo = inc.redo().unionByName(_affected_docs())
-        return canonical_triples(triples.join(redo, "doc_id", "left_semi"), _parts()["canon"])
+        return canonical_triples(triples().join(redo, "doc_id", "left_semi"), canon())
 
     def _prov_retired():
         return inc.retired().unionByName(_affected_docs())
 
-    def _edges():
-        return _parts()["t"].groupBy("subj", "pred", "obj").agg(F.count(F.lit(1)).alias("n_docs"))
-
-    batch = {
+    batch = {"mentions": mentions, "triples": triples} if inc is not None else {}
+    batch |= {
         "nodes": lambda: run_checkpointed(
-            spark, workdir, "nodes", lambda: _parts()["n"], ["category"], resume
+            spark, workdir, "nodes", lambda: build_nodes(mentions(), canon(), cfg), ["category"],
+            resume,
         ),
-        "canon_map": lambda: run_checkpointed(
-            spark, workdir, "canon_map", lambda: _parts()["canon"], None, resume
-        ),
+        "canon_map": lambda: run_checkpointed(spark, workdir, "canon_map", canon, None, resume),
         "edge_provenance": lambda: run_checkpointed_delta(
             spark, workdir, "edge_provenance", _prov_layout if prior is None else _prov_delta,
             _prov_retired, prior, ["pred"], resume, max_chain=cfg.delta_max_chain,
         ),
-        "edges": lambda: run_checkpointed(spark, workdir, "edges", _edges, ["pred"], resume),
+        "edges": lambda: run_checkpointed(
+            spark, workdir, "edges", lambda: edge_counts(canonical()), ["pred"], resume
+        ),
     }
     if inc is not None:
         batch["scored_docs"] = inc.commit_scored_docs
@@ -911,12 +893,10 @@ def _commit_graph_layer(
 
 
 def _run_pipeline(spark, corpus, workdir, prior, cfg, resume):
-    """The one pipeline driver: extraction commits, then the graph-layer
-    batch. `prior=None` is a full build."""
+    """The one pipeline driver: one batch of concurrent commits, the
+    extraction stages included. `prior=None` is a full build."""
     inc = Increment(spark, corpus, workdir, prior, cfg or PipelineConfig(), resume)
-    mentions, triples = inc.commit_extraction()
-    graph = _commit_graph_layer(spark, workdir, triples, mentions, inc.cfg, resume, inc)
-    return {"mentions": mentions, "triples": triples, **graph}
+    return _commit_graph_layer(spark, workdir, inc.triples, inc.mentions, inc.cfg, resume, inc)
 
 
 def run_pipeline_incremental(

@@ -366,5 +366,7 @@ def finalize_graph(
     cfg = cfg or PipelineConfig()
     mentions = read_resolved_stage(spark, out_dir, "mentions")
     triples = read_resolved_stage(spark, out_dir, "triples")
-    graph = _commit_graph_layer(spark, graph_dir, triples, mentions, cfg, resume=False)
+    graph = _commit_graph_layer(
+        spark, graph_dir, lambda: triples, lambda: mentions, cfg, resume=False
+    )
     return {"mentions": mentions, "triples": triples, **graph}
