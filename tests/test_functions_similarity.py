@@ -455,6 +455,27 @@ def test_with_unit_vec_idempotent(spark):
     assert sorted(tuple(r) for r in u1.collect()) == sorted(tuple(r) for r in u2.collect())
 
 
+def test_with_unit_vec_replaces_an_unrelated_unit_column(spark):
+    """Only a `unit` column tagged as the normalization of the same vector
+    column is trusted; any other column of that name is recomputed."""
+    from pyspark.sql import functions as F
+
+    e = _pq_embeddings(spark, n=5, dim=4)
+    for stale in (
+        e.withColumn("unit", F.array(F.lit(2.0), F.lit(0.0))),  # untagged
+        with_unit_vec(e.withColumn("other", F.col("embedding")), "other")  # tag names "other"
+        .withColumn("embedding", F.transform("embedding", lambda x: x * 3)),
+    ):
+        got = with_unit_vec(stale)
+        assert got is not stale
+        for r in got.collect():
+            norm = math.sqrt(sum(x * x for x in r["embedding"]))
+            assert len(r["unit"]) == len(r["embedding"])
+            assert all(
+                math.isclose(u, x / norm, rel_tol=1e-12) for u, x in zip(r["unit"], r["embedding"])
+            )
+
+
 def test_assign_cells_keep_unit(spark):
     from theta_spark.functions.similarity import assign_cells, kmeans_cells_lloyd
 
@@ -466,6 +487,35 @@ def test_assign_cells_keep_unit(spark):
     import math
     for r in got.collect():
         assert math.isclose(sum(x * x for x in r["unit"]), 1.0, rel_tol=1e-9)
+
+
+def test_assign_cells_keep_unit_arrow_feeds_ivfpq(spark):
+    """The large-codebook (Arrow) assignment keeps the unit column's tag,
+    so its (id, cell, unit) query side — which has no `embedding` — feeds
+    ivfpq_adc_topk exactly like the literal path's."""
+    from pyspark.sql import functions as F
+
+    from theta_spark.functions.similarity import (
+        assign_cells,
+        ivfpq_adc_topk,
+        kmeans_cells_lloyd,
+        pq_encode,
+        train_pq,
+    )
+
+    e = _pq_embeddings(spark, n=40, dim=8)
+    _, cents = kmeans_cells_lloyd(e, k=3, iters=1)
+    cbs = train_pq(e, m=2, ksub=4, iters=1, dim=8)
+    enc = pq_encode(e, cbs, m=2, dim=8, cents=cents)
+    q = e.filter(F.col("vec_id") % 5 == 0)
+
+    def served(impl):
+        qs = assign_cells(q, cents, assign_impl=impl, keep_unit=True)
+        assert "embedding" not in qs.columns
+        return sorted(map(tuple, ivfpq_adc_topk(enc, qs, cbs, k=3, m=2, dim=8).collect()))
+
+    lit = served("literal")
+    assert lit and served("arrow") == lit
 
 
 def test_ivfpq_index_roundtrip_serving(spark, tmp_path):

@@ -465,9 +465,10 @@ def _star_cc(e: DataFrame, max_iters: int = 20) -> DataFrame:
     tiny fingerprint aggregate. After the first three rounds convergence
     is only checked every second round — star rounds converge
     monotonically (no period-2 cycles), so fp(k) == fp(k-2) still implies
-    a fixpoint, and skipped rounds stack lazily (their checkpoint
-    materializes inside the next checked round's action), halving the
-    tail's driver round-trips."""
+    a fixpoint, halving the tail's fingerprint round-trips. Under AQE a
+    lazy localCheckpoint is not free: the call itself runs the plan's
+    shuffle map stages (the window and distinct exchanges) as jobs, and
+    only the final stage is deferred to the next action."""
     def fingerprint(df: DataFrame):
         # convergence check = equality of successive edge-set
         # fingerprints. TWO independent bounded hash sums (different
@@ -485,12 +486,12 @@ def _star_cc(e: DataFrame, max_iters: int = 20) -> DataFrame:
 
     prev = None
     for i in range(max_iters):
-        # lazy checkpoint: the fingerprint aggregate is the round's ONE
-        # action and materializes the checkpoint as a side effect — one
-        # driver round-trip per checked round instead of two per round
+        # lazy checkpoint: under AQE the call runs the round's shuffle
+        # stages at once; only the final stage is deferred, and the
+        # fingerprint aggregate (the round's one collect) runs it
         e = _small_star(_large_star(e)).localCheckpoint(eager=False)
         if i >= 3 and (i - 3) % 2 == 0:
-            continue  # unchecked round: stacks lazily into the next action
+            continue  # unchecked round: its final stage runs in the next round's jobs
         fp = fingerprint(e)
         if fp == prev:
             break
@@ -516,8 +517,8 @@ def connected_components(
     """(a,b) undirected edges [+ optional (name) isolated nodes] ->
     (name, component) where component = min name reachable.
 
-    Size-adaptive, three physical paths routed by ONE count action (which
-    also materializes the edge checkpoint):
+    Size-adaptive, three physical paths routed by ONE count of the
+    checkpointed edge set:
     - n <= single_task_budget: single-task union-find (`_local_cc`) —
       the star rounds' fixed per-round costs (two window shuffles + an
       action) dominate tiny edge sets, and a <=200k-edge dict is
@@ -561,8 +562,9 @@ def connected_components(
         .localCheckpoint(eager=False)
     )
 
-    # one count action: decides the path AND materializes the lazy
-    # checkpoint (the heavy paths' first round would have paid this anyway)
+    # one count: decides the path and runs the checkpoint's deferred final
+    # stage (under AQE the lazy localCheckpoint above already ran the
+    # distinct's shuffle stage when it was called)
     n_edges = e.count()
     if n_edges <= min(single_task_budget, local_threshold):
         labels = _local_cc(e)

@@ -59,6 +59,20 @@ def graph_nodes(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFra
     )
 
 
+# Default `checkpoint_every` of the operators whose rounds each read the
+# previous round's state twice (pagerank, bfs_distances), so that an
+# uncut interval of k rounds holds 2^k copies of the plan before it.
+# Measured on the 40-node test graph (4 vCPU, local[4]): the optimized
+# PageRank plan holds 1.1k, 3.5k, 9.2k, 22.4k and 53.1k chars after 1-5
+# uncut rounds (BFS 0.6k-35.2k); at 12 rounds a cut every 2, 3, 4 or 6
+# rounds leaves 3.7k, 9.5k, 23.1k or 124k chars (BFS 2.0k-72.9k), and
+# k=4 ran about as fast as 2 or 3 (PageRank) or faster (BFS, whose
+# per-cut job costs more than its short plan saves), while 6 was slower.
+# The last round is never cut, so calls of at most DEFAULT_CUT rounds
+# keep the uncut plan.
+DEFAULT_CUT = 4
+
+
 def fixed_rounds(state: tuple, step, rounds: int, checkpoint_every: int | None) -> tuple:
     """`state = step(state, r)` for r = 1..rounds over a tuple of DataFrames.
 
@@ -80,7 +94,7 @@ def pagerank(
     src: str = "src",
     dst: str = "dst",
     init_ranks: DataFrame | None = None,
-    checkpoint_every: int | None = None,
+    checkpoint_every: int | None = DEFAULT_CUT,
     seeds: DataFrame | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank in i64 fixed-point → (node, rank_s, rank).
@@ -98,11 +112,10 @@ def pagerank(
 
     The loop (`fixed_rounds`) builds ONE lazy plan, no action per round.
     Every round reads the ranks twice (contributions and dangling mass),
-    so k uncut rounds hold 2^k copies of the plan before them. Past a
-    few rounds pass a SMALL `checkpoint_every=k` (2-4; at iters=40 on a
-    40-node graph, local[4], k=3 took 18 s and k=8 took 52 s): every k
-    rounds the ranks are eagerly localCheckpointed, one job per interval
-    (the GraphX-style materialize). The i64 arithmetic is partitioning-
+    so k uncut rounds hold 2^k copies of the plan before them. Every
+    `checkpoint_every` rounds (DEFAULT_CUT unless given; None: never) the
+    ranks are eagerly localCheckpointed, one job per interval (the
+    GraphX-style materialize). The i64 arithmetic is partitioning-
     invariant, so the cuts cannot change a bit of the result (pinned).
 
     `init_ranks` (node, rank_s) warm-starts the iteration — the
@@ -508,7 +521,7 @@ def bfs_distances(
     rounds: int = 3,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int | None = None,
+    checkpoint_every: int | None = DEFAULT_CUT,
 ) -> DataFrame:
     """Multi-source BFS over the DIRECTED edge set: (node, dist) for every
     node reachable from `seeds` (a (node) DataFrame, dist 0) within
@@ -528,9 +541,10 @@ def bfs_distances(
     lands on the groupBy's partial (map-side) aggregation and AQE
     skew-split. Each round reads the previous round's result twice (the
     min-union and, through the frontier, the join), so like pagerank an
-    uncut interval of k rounds holds 2^k plan copies: for deep `rounds`
-    pass a small `checkpoint_every` (bit-unobservable: the arithmetic is
-    partitioning-invariant)."""
+    uncut interval of k rounds holds 2^k plan copies: the state is cut
+    every `checkpoint_every` rounds (DEFAULT_CUT unless given; None:
+    never), which is bit-unobservable because the arithmetic is
+    partitioning-invariant."""
     # id-type-agnostic like every other op here: node ids join on their
     # own type (the KG's ids are STRINGS — a long cast would null them
     # out and silently return an empty frontier)

@@ -31,24 +31,29 @@ def cosine(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+# column-metadata key naming the vector column a `with_unit_vec` output
+# normalizes
+_UNIT_OF = "unit_of"
+
+
 def with_unit_vec(df: DataFrame, vec_col: str = "embedding", out_col: str = "unit") -> DataFrame:
     """Pre-normalize once so each pair costs one dot product, not two extra
     norms (norms over the corpus are O(N*d) once instead of O(N*Q*d)).
 
-    Idempotent: if `out_col` is already present the frame is returned
-    unchanged, so a caller can normalize (and persist) ONE projection and
-    pass it through every index stage — trainer, encoder, query side —
-    without each stage re-deriving it from the raw vectors.
-
-    CALLER CONTRACT: a pre-existing `out_col` is TRUSTED to be the unit
-    normalization of `vec_col` (the short-circuit keys on the column
-    name; it cannot verify provenance). Frames whose `unit` column means
-    something else must rename it before entering the similarity API."""
-    if out_col in df.columns:
+    Idempotent: `out_col` carries column metadata naming the `vec_col` it
+    normalizes, and a frame whose `out_col` already carries that tag is
+    returned unchanged, so a caller can normalize (and persist) ONE
+    projection and pass it through every index stage — trainer, encoder,
+    query side — without each stage re-deriving it from the raw vectors.
+    Any other column named `out_col` (untagged, or the unit of another
+    vector column) is replaced by the normalization of `vec_col`."""
+    if out_col in df.columns and df.schema[out_col].metadata.get(_UNIT_OF) == vec_col:
         return df
     v = F.col(vec_col).cast("array<double>")
     n = _norm(v)
-    return df.withColumn(out_col, F.transform(v, lambda x: x / n))
+    return df.withColumn(
+        out_col, F.transform(v, lambda x: x / n).alias(out_col, metadata={_UNIT_OF: vec_col})
+    )
 
 
 def brute_force_topk(
@@ -302,7 +307,10 @@ def assign_cells(
         assign_impl == "auto" and len(cents) > literal_max_k
     )
     out = _assign_cells_arrow(u, cents) if use_arrow else _assign_cells_literal(u, cents)
-    cols = [F.col("_vid").alias(id_col), "cell"] + (["unit"] if keep_unit else [])
+    # mapInPandas output carries no column metadata: re-tag the kept unit
+    # so with_unit_vec on the query side trusts it
+    unit = F.col("unit").alias("unit", metadata=u.schema["unit"].metadata)
+    cols = [F.col("_vid").alias(id_col), "cell"] + ([unit] if keep_unit else [])
     return out.select(*cols)
 
 

@@ -532,28 +532,55 @@ def audit_stage(spark: SparkSession, workdir: str, stage: str) -> DataFrame:
     )
 
 
-def _doc_changes(keys: DataFrame, prior_keys: DataFrame) -> DataFrame:
+def _doc_key_sides(keys: DataFrame, prior_keys: DataFrame) -> DataFrame:
+    """Per doc_id, its (doc_id, sha256) key rows on each side: `cur` and
+    `pri` count the doc_id's rows in the current corpus and in the prior
+    run, `n_extracted` its current rows whose key has no prior row and
+    `n_retired` its prior rows whose key has no current row. One shuffle:
+    a per-doc_id aggregate over the tagged union of both key tables. The
+    change table (_doc_changes) and the delta_stats counts both derive
+    from it without another shuffle of the keys."""
+
+    def side(df, is_cur):
+        # a NULL content hash (NULL content) is a key like any other
+        sha = F.coalesce(F.col("sha256"), F.lit(""))
+        return df.select("doc_id", sha.alias("sha256"), F.lit(is_cur).alias("is_cur"))
+
+    per_doc = (
+        side(keys, True)
+        .unionByName(side(prior_keys, False))
+        .groupBy("doc_id")
+        .agg(
+            F.collect_list(F.when(F.col("is_cur"), F.col("sha256"))).alias("c"),
+            F.collect_list(F.when(~F.col("is_cur"), F.col("sha256"))).alias("p"),
+        )
+    )
+
+    def only_in(a, b):
+        return F.size(F.filter(a, lambda x: ~F.array_contains(b, x)))
+
+    return per_doc.select(
+        "doc_id",
+        F.size("c").alias("cur"),
+        F.size("p").alias("pri"),
+        only_in("c", "p").alias("n_extracted"),
+        only_in("p", "c").alias("n_retired"),
+    )
+
+
+def _doc_changes(sides: DataFrame) -> DataFrame:
     """(doc_id, cur, pri) for every doc_id whose SET of content keys
-    (sha256 values) differs between the current corpus and the prior run;
-    `cur` and `pri` say whether the doc_id has a version on each side.
-    One shuffle: a per-doc_id aggregate over the tagged union of both key
-    tables.
+    (sha256 values) differs between the current corpus and the prior run,
+    from its per-doc key counts (_doc_key_sides): a key on one side only
+    is an extracted or a retired row. `cur` and `pri` say whether the
+    doc_id has a version on each side.
 
     The unit of change is the doc_id, not the key, because delta stages
     retire rows by doc_id: a doc_id that keeps one version and loses (or
     gains) another has EVERY current version re-extracted, or retiring
     it would drop the unchanged version's rows with the changed one's."""
-    shas = keys.select("doc_id", "sha256", F.lit(True).alias("is_cur")).unionByName(
-        prior_keys.select("doc_id", "sha256", F.lit(False).alias("is_cur"))
-    )
-    per_doc = shas.groupBy("doc_id").agg(
-        F.array_sort(F.collect_set(F.when(F.col("is_cur"), F.col("sha256")))).alias("cur_shas"),
-        F.array_sort(F.collect_set(F.when(~F.col("is_cur"), F.col("sha256")))).alias("pri_shas"),
-    )
-    return per_doc.where(F.col("cur_shas") != F.col("pri_shas")).select(
-        "doc_id",
-        (F.size("cur_shas") > 0).alias("cur"),
-        (F.size("pri_shas") > 0).alias("pri"),
+    return sides.where((F.col("n_extracted") > 0) | (F.col("n_retired") > 0)).select(
+        "doc_id", (F.col("cur") > 0).alias("cur"), (F.col("pri") > 0).alias("pri")
     )
 
 
@@ -657,13 +684,16 @@ class Increment:
         self.registry = None
         if prior is not None and stage_complete(prior, "scored_docs"):
             self.registry = read_stage(spark, prior, "scored_docs")
-        # (doc_id, sha256) of the CURRENT corpus: the change table,
-        # delta_stats and a registry-less scored_docs consume it — from
+        # per-doc key counts against the prior, aggregated once: the
+        # change table and delta_stats both derive from them — from
         # parallel commit threads — and each lazy re-scan would re-read
-        # the corpus and re-hash every document's full content
-        self.keys = _once(lambda: self.docs.select("doc_id", "sha256").localCheckpoint(eager=True))
-        self.changes = _once(
-            lambda: _doc_changes(self.keys(), self._prior_keys()).localCheckpoint(eager=True)
+        # the corpus and re-hash every document's full content. (Only
+        # against a prior with no registry does commit_scored_docs hash
+        # the corpus once more, for its self-contained key snapshot.)
+        self.sides = _once(
+            lambda: _doc_key_sides(
+                self.docs.select("doc_id", "sha256"), self._prior_keys()
+            ).localCheckpoint(eager=True)
         )
         self.scored = _once(self._score)
         # the row stages, committed once each: the graph-layer batch runs
@@ -681,8 +711,8 @@ class Increment:
         # the changed docs (every doc of a full build) scored ONCE; each
         # row stage commits a projection of it. Against a prior, every
         # current version of a changed doc_id (redo) is re-extracted: the
-        # change table is materialized once, so only this semi-join scans
-        # the corpus content again, to fetch the delta docs' text.
+        # per-doc key counts are materialized once, so only this semi-join
+        # scans the corpus content again, to fetch the delta docs' text.
         docs = self.docs
         if self.prior is not None:
             docs = docs.join(self.redo(), "doc_id", "left_semi")
@@ -691,11 +721,11 @@ class Increment:
     def retired(self) -> DataFrame:
         """doc_ids whose prior rows must not resolve: prior docs that
         changed or left the corpus."""
-        return self.changes().where(F.col("pri")).select("doc_id")
+        return _doc_changes(self.sides()).where(F.col("pri")).select("doc_id")
 
     def redo(self) -> DataFrame:
         """doc_ids re-extracted by this refresh."""
-        return self.changes().where(F.col("cur")).select("doc_id")
+        return _doc_changes(self.sides()).where(F.col("cur")).select("doc_id")
 
     def _commit_rows(self, stage: str, project) -> DataFrame:
         return run_checkpointed_delta(
@@ -718,7 +748,8 @@ class Increment:
         current key."""
         if self.prior is not None and self.registry is None:
             return run_checkpointed(
-                self.spark, self.workdir, "scored_docs", lambda: self.keys().distinct(),
+                self.spark, self.workdir, "scored_docs",
+                lambda: self.docs.select("doc_id", "sha256").distinct(),
                 resume=self.resume,
             )
         return run_checkpointed_delta(
@@ -729,30 +760,20 @@ class Increment:
 
     def commit_delta_stats(self) -> DataFrame:
         """One row (n_docs, n_extracted, n_retired) of key counts against
-        the prior: one lazy aggregate over the tagged union of current and
-        prior keys, run by the stage's own write job. Per key, how often it
-        occurs on each side: a current row counts as extracted when its
-        key has no prior occurrence, a prior row as retired when its key
-        has no current one — the counts of the two key anti-joins, without
-        an action or a driver-side row list."""
+        the prior: one lazy sum over the per-doc key counts
+        (_doc_key_sides), run by the stage's own write job. A current row
+        counts as extracted when its key has no prior occurrence, a prior
+        row as retired when its key has no current one — the counts of the
+        two key anti-joins, without an action or a driver-side row list."""
 
         def build():
-            per_key = (
-                self.keys().select("*", F.lit(1).alias("cur"), F.lit(0).alias("pri"))
-                .unionByName(
-                    self._prior_keys().select("*", F.lit(0).alias("cur"), F.lit(1).alias("pri"))
-                )
-                .groupBy("doc_id", "sha256")
-                .agg(F.sum("cur").alias("cur"), F.sum("pri").alias("pri"))
-            )
-
             def total(c):  # 0, not NULL, when no row qualifies
                 return F.coalesce(F.sum(c), F.lit(0))
 
-            return per_key.agg(
+            return self.sides().agg(
                 total("cur").alias("n_docs"),
-                total(F.when(F.col("pri") == 0, F.col("cur"))).alias("n_extracted"),
-                total(F.when(F.col("cur") == 0, F.col("pri"))).alias("n_retired"),
+                total("n_extracted").alias("n_extracted"),
+                total("n_retired").alias("n_retired"),
             )
 
         return run_checkpointed(self.spark, self.workdir, "delta_stats", build, resume=self.resume)

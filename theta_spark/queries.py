@@ -3836,7 +3836,7 @@ def sim_ivfpq_multiprobe(spark, sf_dir):
         .crossJoin(F.broadcast(cent_df))
         .select(
             "vec_id",
-            "unit",
+            "embedding",
             "pcell",
             F.round(_dot(F.col("unit"), F.col("cvec")), 4).alias("csim"),
         )
@@ -3849,7 +3849,7 @@ def sim_ivfpq_multiprobe(spark, sf_dir):
         .filter(F.col("prk") <= 2)
     )
     qs = ranked.groupBy("vec_id").agg(
-        F.collect_list("pcell").alias("cell"), F.first("unit").alias("unit")
+        F.collect_list("pcell").alias("cell"), F.first("embedding").alias("embedding")
     )
     return ivfpq_adc_topk(enc, qs, cbs, k=5, m=2).orderBy("query_id", "rk")
 
