@@ -6,6 +6,7 @@ pipeline edge table (not just the driver's lineitem-derived graph)."""
 from __future__ import annotations
 
 import itertools
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -274,32 +275,34 @@ def test_coreness_monotone_and_fixed_round_deterministic(spark):
     assert again == set(prev.items())
 
 
+def _plan_shape(df) -> str:
+    """The optimized plan with its expression ids normalized."""
+    return re.sub(r"#\d+", "#", df._jdf.queryExecution().optimizedPlan().toString())
+
+
 def test_checkpoint_every_is_bit_identical_and_truncates_plan(spark, edges_df):
-    """checkpoint_every bounds lineage (plan becomes a scan of cached
-    partitions past each interval) without changing a single bit — the
-    i64 / integer-count arithmetic is partitioning-invariant, so the
-    materialize points are unobservable in the result. Uniform,
-    personalized and warm-started PageRank share one loop; each is pinned."""
+    """Cuts bound lineage (the plan becomes a scan of cached partitions
+    past each cut) without changing a single bit — the i64 / integer-count
+    arithmetic is partitioning-invariant, so the materialize points are
+    unobservable in the result. PageRank cuts every round whatever
+    `checkpoint_every` says, so its plan at 12 rounds is the plan at 2:
+    uniform, personalized and warm-started PageRank share one loop; each
+    is pinned against its replica."""
     from theta_spark.functions.graph import coreness, label_propagation
 
     seeds = spark.createDataFrame([(0,), (7,), (23,)], "node: long")
     old_edges = [(u, v) for u, v in EDGES if (u + v) % 5 != 0]
-    init = spark.createDataFrame(
-        sorted(_py_pagerank(old_edges, iters=3).items()), "node: long, rank_s: long"
-    )
-    # an uncut round doubles the plan, so the added modes stop at 6 rounds
-    for iters, mode in ((9, {}), (6, {"seeds": seeds}), (6, {"init_ranks": init})):
-        plain = pagerank(edges_df, iters=iters, checkpoint_every=None, **mode)
-        ckpt = pagerank(edges_df, iters=iters, checkpoint_every=3, **mode)
-        assert sorted(map(tuple, ckpt.select("node", "rank_s").collect())) == sorted(
-            map(tuple, plain.select("node", "rank_s").collect())
-        ), mode
-        # the checkpointed variant's plan is rooted in the cached RDD (the
-        # last interval's materialize), not the full join chain
-        ckpt_plan = ckpt._jdf.queryExecution().optimizedPlan().toString()
-        plain_plan = plain._jdf.queryExecution().optimizedPlan().toString()
-        assert "LogicalRDD" in ckpt_plan, mode
-        assert len(ckpt_plan) < len(plain_plan), mode
+    prior = _py_pagerank(old_edges, iters=3)
+    init = spark.createDataFrame(sorted(prior.items()), "node: long, rank_s: long")
+    for mode, want in (
+        ({}, _py_pagerank(EDGES, iters=12)),
+        ({"seeds": seeds}, _py_ppr(EDGES, [0, 7, 23], iters=12)),
+        ({"init_ranks": init}, _py_pagerank_from(EDGES, prior, iters=12)),
+    ):
+        deep = pagerank(edges_df, iters=12, **mode)
+        assert {r["node"]: r["rank_s"] for r in deep.collect()} == want, mode
+        assert "LogicalRDD" in _plan_shape(deep), mode
+        assert _plan_shape(deep) == _plan_shape(pagerank(edges_df, iters=2, **mode)), mode
 
     assert sorted(map(tuple, coreness(edges_df, rounds=8, checkpoint_every=2).collect())) == sorted(
         map(tuple, coreness(edges_df, rounds=8).collect())
@@ -316,8 +319,8 @@ PLAN_CHARS_BOUND = 30_000
 
 def test_pagerank_and_bfs_cut_by_default(spark, edges_df):
     """Deep calls with default arguments stay exact and keep a bounded
-    plan: pagerank and bfs_distances cut every DEFAULT_CUT rounds, so 12
-    rounds hold at most 2^4 plan copies instead of 2^12."""
+    plan: pagerank cuts every round and bfs_distances every DEFAULT_CUT
+    rounds, so 12 rounds hold at most 2^4 plan copies instead of 2^12."""
     from theta_spark.functions.graph import bfs_distances
 
     pr = pagerank(edges_df, iters=12)
@@ -328,6 +331,29 @@ def test_pagerank_and_bfs_cut_by_default(spark, edges_df):
     assert sorted(map(tuple, bfs.collect())) == sorted(map(tuple, want.collect()))
     for df in (pr, bfs):
         assert len(df._jdf.queryExecution().optimizedPlan().toString()) < PLAN_CHARS_BOUND
+
+
+def test_pagerank_round_runs_few_jobs(spark, edges_df, tmp_path):
+    """A PageRank round is one cut that reads the ranks once and the
+    dangling mass off the cut's Observation: at most 4 Spark jobs per
+    round, counted as pagerank(12) - pagerank(4) over 8 rounds. The edges
+    are read back from parquet, as an edge stage is; a parquet scan has a
+    size estimate, so each round's join is planned once."""
+    path = str(tmp_path / "edges")
+    edges_df.write.parquet(path)
+    e = spark.read.parquet(path)
+    sc = spark.sparkContext
+    jobs = {}
+    for iters in (4, 12):
+        group = f"pagerank-jobs-{iters}"
+        sc.setJobGroup(group, "pagerank")
+        try:
+            got = {r["node"]: r["rank_s"] for r in pagerank(e, iters=iters).collect()}
+        finally:
+            sc._jsc.clearJobGroup()
+        assert got == _py_pagerank(EDGES, iters=iters)
+        jobs[iters] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs[12] - jobs[4] <= 4 * 8, jobs
 
 
 class _CountingFrame:
@@ -647,26 +673,30 @@ def test_neighbor_sample_exact_k_and_replayable(spark):
 
 
 def test_random_walks_replica_and_dead_end(spark):
+    """Walks from 0 can dead-end at 2; start 2 is itself a dead end and
+    start 9 is in no edge, so both emit only step 0, at 3 and at 40
+    steps."""
     from theta_spark.functions.graph import random_walks
 
     # 0 -> {1,2}, 1 -> {3}, 2 -> {}, 3 -> {0}: walks can dead-end at 2
     edges = [(0, 1), (0, 2), (1, 3), (3, 0)]
     e = spark.createDataFrame(edges, "src long, dst long")
-    starts = spark.createDataFrame([(0,)], "node long")
-    got = sorted(
-        (r["walk_id"], r["walk_idx"], r["step"], r["node"])
-        for r in random_walks(e, starts, steps=3, walks_per_node=2, seed=42).collect()
-    )
-
+    starts = spark.createDataFrame([(0,), (2,), (9,)], "node long")
     adj = {0: [1, 2], 1: [3], 3: [0]}
-    want = []
-    for wi in range(2):
-        cur = 0
-        want.append((0, wi, 0, 0))
-        for s in range(1, 4):
-            nbrs = adj.get(cur, [])
-            if not nbrs:
-                break
-            cur = min(nbrs, key=lambda d: (_draw32_py(f"{cur}#{d}#{wi}", f"walk{s}"), d))
-            want.append((0, wi, s, cur))
-    assert got == sorted(want)
+    for steps in (3, 40):
+        got = sorted(
+            (r["walk_id"], r["walk_idx"], r["step"], r["node"])
+            for r in random_walks(e, starts, steps=steps, walks_per_node=2, seed=42).collect()
+        )
+        want = []
+        for start in (0, 2, 9):
+            for wi in range(2):
+                cur = start
+                want.append((start, wi, 0, cur))
+                for s in range(1, steps + 1):
+                    nbrs = adj.get(cur, [])
+                    if not nbrs:
+                        break
+                    cur = min(nbrs, key=lambda d: (_draw32_py(f"{cur}#{d}#{wi}", f"walk{s}"), d))
+                    want.append((start, wi, s, cur))
+        assert got == sorted(want), steps

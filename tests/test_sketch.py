@@ -138,3 +138,24 @@ def test_exact_quantiles_definitional_and_bucket_invariant(spark):
     assert got2 == got
     # p1000 is the max, p~0+ is the min
     assert got[1000] == max(vals) and got[1] == min(vals)
+
+
+def test_exact_quantiles_scans_its_input_once(spark):
+    """The histogram feeds the prefix sum's two branches and the total;
+    it is cut once, so the input is read by one task per partition and
+    its scan node is not repeated in the executed plan."""
+    from theta_spark.functions.sketch import exact_quantiles
+
+    sc = spark.sparkContext
+    reads = sc.accumulator(0)
+
+    def counted(batches):
+        reads.add(1)
+        yield from batches
+
+    vals = [5, 5, 5, 7, 9, 9, 12, 40, 40, 41, 100, 100, 100, 100, 3]
+    df = spark.createDataFrame([(v,) for v in vals], "x long").coalesce(1).mapInArrow(counted, "x long")
+    q = exact_quantiles(df, "x", [1, 500, 1000], bucket_width=10)
+    assert {r["q_permille"]: r["v"] for r in q.collect()} == {1: 3, 500: 12, 1000: 100}
+    assert reads.value == 1
+    assert q._jdf.queryExecution().executedPlan().toString().count("MapInArrow") <= 1

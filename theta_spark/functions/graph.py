@@ -9,9 +9,9 @@ Scale notes (100 TB / 10^9-node targets):
 - PageRank is the classic iterative equi-join: ranks ⨝ edges on src,
   groupBy dst. Skewed head entities are exactly the north rule's concern;
   the join keys are the edge endpoints, so AQE skew-join splitting
-  applies, and the per-iteration dangling mass is a 1-row aggregate
-  broadcast back (no collect per iteration — the loop builds one lazy
-  plan, O(iters) shuffles total).
+  applies. Each round is cut, and the dangling mass is one scalar per
+  round, observed at that cut (no job of its own), so a round reads the
+  previous ranks once and its plan does not grow with the round count.
 - Arithmetic is **integer fixed-point** (rank mass scaled by 10^12,
   i64). Integer sums are associative, so the result is bit-identical
   under any partitioning / AQE re-plan — the same trick the k-means
@@ -25,7 +25,9 @@ Scale notes (100 TB / 10^9-node targets):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import functools
+
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 SCALE = 10**12
@@ -59,15 +61,14 @@ def graph_nodes(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFra
     )
 
 
-# Default `checkpoint_every` of the operators whose rounds each read the
-# previous round's state twice (pagerank, bfs_distances), so that an
-# uncut interval of k rounds holds 2^k copies of the plan before it.
-# Measured on the 40-node test graph (4 vCPU, local[4]): the optimized
-# PageRank plan holds 1.1k, 3.5k, 9.2k, 22.4k and 53.1k chars after 1-5
-# uncut rounds (BFS 0.6k-35.2k); at 12 rounds a cut every 2, 3, 4 or 6
-# rounds leaves 3.7k, 9.5k, 23.1k or 124k chars (BFS 2.0k-72.9k), and
-# k=4 ran about as fast as 2 or 3 (PageRank) or faster (BFS, whose
-# per-cut job costs more than its short plan saves), while 6 was slower.
+# Default `checkpoint_every` of bfs_distances, the one operator whose
+# rounds still read the previous round's state twice, so that an uncut
+# interval of k rounds holds 2^k copies of the plan before it (pagerank
+# cuts every round). Measured on the 40-node test graph (4 vCPU,
+# local[4]): the optimized BFS plan holds 0.6k-35.2k chars after 1-5
+# uncut rounds; at 12 rounds a cut every 2, 3, 4 or 6 rounds leaves
+# 2.0k-72.9k, and k=4 ran faster than 2 or 3 (the per-cut job costs more
+# than the short plan saves), while 6 was slower.
 # The last round is never cut, so calls of at most DEFAULT_CUT rounds
 # keep the uncut plan.
 DEFAULT_CUT = 4
@@ -87,6 +88,14 @@ def fixed_rounds(state: tuple, step, rounds: int, checkpoint_every: int | None) 
     return state
 
 
+def _observed_cut(df: DataFrame, *metrics) -> tuple[DataFrame, dict]:
+    """Eager localCheckpoint of `df` plus the aggregate `metrics` over its
+    rows, observed while the cut's job runs (no job of their own)."""
+    obs = Observation()
+    df = df.observe(obs, *metrics).localCheckpoint(eager=True)
+    return df, obs.get
+
+
 def pagerank(
     edges: DataFrame,
     iters: int = 4,
@@ -102,7 +111,7 @@ def pagerank(
     Update rule per iteration (all-integer, exact):
         contrib(e)  = r(src) // out_deg(src)          per distinct edge
         S(v)        = Σ contrib over in-edges of v     (exact i64 sum)
-        D           = Σ r over dangling nodes          (1-row agg, broadcast)
+        D           = Σ r over dangling nodes          (observed scalar)
         r'(v)       = ((100-d) * (SCALE//N)) // 100
                       + (d * (S(v) + D//N)) // 100
     which is the standard r' = (1-α)/N + α(S + D/N) with mass scaled by
@@ -110,13 +119,16 @@ def pagerank(
     `rank_s` is the exact invariant the oracle matches. Total mass stays
     ≤ SCALE (floor-division leaks stay in the floors, never duplicate).
 
-    The loop (`fixed_rounds`) builds ONE lazy plan, no action per round.
-    Every round reads the ranks twice (contributions and dangling mass),
-    so k uncut rounds hold 2^k copies of the plan before them. Every
-    `checkpoint_every` rounds (DEFAULT_CUT unless given; None: never) the
-    ranks are eagerly localCheckpointed, one job per interval (the
-    GraphX-style materialize). The i64 arithmetic is partitioning-
-    invariant, so the cuts cannot change a bit of the result (pinned).
+    Each round starts by eagerly localCheckpointing the previous round's
+    ranks, and the Observation on that cut reads D, which enters the
+    round as a literal: D costs no job and every round reads the ranks
+    once, as one groupBy(node) over the contributions unioned with a zero
+    row per node. So the plan of the last round starts at a LogicalRDD
+    whatever `iters` is. The i64 arithmetic is partitioning-invariant, so
+    the cuts cannot change a bit of the result (pinned).
+    `checkpoint_every` changes nothing, since every round is cut; it stays
+    on the signature only because the benchmark's graph workload passes
+    it, and goes once that stops.
 
     `init_ranks` (node, rank_s) warm-starts the iteration — the
     INCREMENTAL path: after the pipeline merges an edge delta, reuse the
@@ -130,54 +142,59 @@ def pagerank(
     mass return to the seed set instead of uniformly, i.e.
         r'(v) = (1-α)·T(v) + α·(S(v) + D·T(v))
     with T uniform over the seeds present in the graph (integer form:
-    SCALE//n_seeds at seeds, 0 elsewhere; init = T). Same one-lazy-plan /
-    O(iters)-shuffle shape, same exact i64 arithmetic — the recurrence
-    stays SQL-unrollable and bit-exact. Mutually exclusive with
-    `init_ranks` (warm-started PPR would need the seed base as the
-    new-node fallback; keep the contracts separate).
+    SCALE//n_seeds at seeds, 0 elsewhere; init = T). Same rounds, same
+    exact i64 arithmetic — the recurrence stays SQL-unrollable and
+    bit-exact. Mutually exclusive with `init_ranks` (warm-started PPR
+    would need the seed base as the new-node fallback; keep the
+    contracts separate).
     """
     if seeds is not None and init_ranks is not None:
         raise ValueError("pagerank: seeds and init_ranks are mutually exclusive")
     e = edges.select(src, dst).distinct().localCheckpoint(eager=False)
-    nodes = graph_nodes(e, src, dst).localCheckpoint(eager=False)
-    n_nodes = nodes.count()  # one scalar job up front; O(1) driver traffic
+    # the node table in one aggregate, out_deg = a node's src rows (0 =
+    # dangling); seed rows add no out_deg, so a seed outside the graph
+    # keeps a NULL one and drops out
+    ends = [
+        e.select(F.col(src).alias("node"), F.lit(1).alias("o")),
+        e.select(F.col(dst).alias("node"), F.lit(0).alias("o")),
+    ]
+    node_aggs = [F.sum("o").cast("long").alias("out_deg")]
+    sizes = [F.count(F.lit(1)).alias("n_nodes")]
+    if seeds is not None:
+        ends = [d.withColumn("is_seed", F.lit(0)) for d in ends]
+        ends.append(seeds.select("node", F.lit(None).cast("int").alias("o"), F.lit(1).alias("is_seed")))
+        node_aggs.append(F.max("is_seed").alias("is_seed"))
+        sizes.append(F.coalesce(F.sum("is_seed"), F.lit(0)).alias("n_seeds"))
+    ndeg, n = _observed_cut(
+        functools.reduce(DataFrame.unionByName, ends)
+        .groupBy("node")
+        .agg(*node_aggs)
+        .filter(F.col("out_deg").isNotNull()),
+        *sizes,
+    )
+    n_nodes = n["n_nodes"]
     if n_nodes == 0:
         # empty graph: same contract as triangle_count/degree_stats —
         # an empty result with the full output schema (node keeps the
         # input's endpoint type), not a ZeroDivisionError
-        return nodes.select(
+        return ndeg.select(
             "node",
             F.lit(None).cast("long").alias("rank_s"),
             F.lit(None).cast("double").alias("rank"),
         )
     base = SCALE // n_nodes
-    outd = e.groupBy(F.col(src).alias("node")).agg(F.count(F.lit(1)).alias("out_deg"))
-    # node table annotated once with out_deg (0 = dangling)
-    ndeg = nodes.join(outd, "node", "left").select(
-        "node", F.coalesce("out_deg", F.lit(0)).cast("long").alias("out_deg")
-    ).localCheckpoint(eager=False)
 
     # the modes differ only in the start vector, the teleport term and the
     # share of the dangling mass; uniform and warm start keep `base` for both
     teleport = str(((100 - damping_pct) * base) // 100)
-    dangling = f"(dm div {n_nodes})"
+    n_share = n_nodes
     r0 = F.lit(base)
     if seeds is not None:
-        ndeg = ndeg.join(
-            seeds.select("node").distinct().withColumn("is_seed", F.lit(1)),
-            "node",
-            "left",
-        ).select(
-            "node", "out_deg", F.coalesce("is_seed", F.lit(0)).cast("int").alias("is_seed")
-        ).localCheckpoint(eager=False)
-        n_seeds = ndeg.filter(F.col("is_seed") == 1).count()
-        if n_seeds == 0:
+        n_share = n["n_seeds"]
+        if n_share == 0:
             raise ValueError("pagerank: no seed node is present in the graph")
-        seed_base = SCALE // n_seeds
-        teleport = (
-            f"(CASE WHEN is_seed = 1 THEN {((100 - damping_pct) * seed_base) // 100} ELSE 0 END)"
-        )
-        dangling = f"(CASE WHEN is_seed = 1 THEN dm div {n_seeds} ELSE 0 END)"
+        seed_base = SCALE // n_share
+        teleport = f"CASE WHEN is_seed = 1 THEN {((100 - damping_pct) * seed_base) // 100} ELSE 0 END"
         r0 = F.when(F.col("is_seed") == 1, F.lit(seed_base)).otherwise(F.lit(0))
     start = ndeg
     if init_ranks is not None:
@@ -186,34 +203,34 @@ def pagerank(
             init_ranks.select("node", F.col("rank_s").alias("r0")), "node", "left"
         )
         r0 = F.coalesce("r0", F.lit(base))
-    # `div` is Spark's exact integral division — a double `/` + cast(long)
-    # can truncate one off near quotient boundaries, which would break
-    # bit-equality with the integer-arithmetic oracle
-    new_rank = (
-        f"CAST({teleport} + (({damping_pct} * (coalesce(s, 0) + {dangling})) div 100) AS BIGINT)"
-    )
+    cols = ndeg.columns
+    zero = ndeg.select("node", F.lit(0).cast("long").alias("c"), *cols[1:])
+    carried = [F.max(c).alias(c) for c in cols[1:]]
+    dangling = F.sum(F.when(F.col("out_deg") == 0, F.col("r")).otherwise(0)).alias("dm")
 
     def step(state, _r):
-        (ranks,) = state
-        contrib = (
-            e.join(ranks.filter(F.col("out_deg") > 0), e[src] == F.col("node"))
-            .select(F.col(dst).alias("node"), F.expr("r div out_deg").alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("s"))
+        ranks, d = _observed_cut(state[0], dangling)
+        share = d["dm"] // n_share
+        if seeds is not None:
+            share = f"CASE WHEN is_seed = 1 THEN {share} ELSE 0 END"
+        contrib = e.join(ranks.filter(F.col("out_deg") > 0), e[src] == F.col("node")).select(
+            F.col(dst).alias("node"),
+            F.expr("r div out_deg").alias("c"),
+            *(F.lit(0).alias(c) for c in cols[1:]),
         )
-        # dangling mass: 1-row aggregate, broadcast into every row — stays
-        # in the plan, no per-iteration driver action
-        dang = ranks.filter(F.col("out_deg") == 0).agg(
-            F.coalesce(F.sum("r"), F.lit(0)).cast("long").alias("dm")
-        )
+        # `div` is Spark's exact integral division — a double `/` +
+        # cast(long) can truncate one off near quotient boundaries, which
+        # would break bit-equality with the integer-arithmetic oracle
+        new_rank = f"CAST(({teleport}) + (({damping_pct} * (s + ({share}))) div 100) AS BIGINT)"
         return (
-            ndeg.join(contrib, "node", "left")
-            .crossJoin(F.broadcast(dang))
-            .select(*ndeg.columns, F.expr(new_rank).alias("r")),
+            contrib.unionByName(zero)
+            .groupBy("node")
+            .agg(F.sum("c").alias("s"), *carried)
+            .select(*cols, F.expr(new_rank).alias("r")),
         )
 
-    ranks = start.select(*ndeg.columns, r0.cast("long").alias("r"))
-    (ranks,) = fixed_rounds((ranks,), step, iters, checkpoint_every)
+    ranks = start.select(*cols, r0.cast("long").alias("r"))
+    (ranks,) = fixed_rounds((ranks,), step, iters, None)
     return ranks.select(
         "node",
         F.col("r").alias("rank_s"),
@@ -427,26 +444,26 @@ def label_propagation(
     (init: own id). Deterministic by construction — integer counts, total
     tie order — so the result is bit-identical under any partitioning.
 
-    Scale shape: one lazy plan, 2 shuffles per step (adjacency ⨝ labels
-    on nbr, then groupBy node) — the same iterative equi-join skeleton as
-    PageRank, so AQE skew-split covers hub entities; label payloads are
-    node ids, never grow. Deep `steps` → pass `checkpoint_every` (same
-    bounded-lineage materialize as pagerank; counts + total tie order
-    are partitioning-invariant so the result is bit-identical)."""
-    adj = _adjacency(undirected_edges(edges, src, dst))
-    w = Window.partitionBy("node").orderBy(F.desc("n"), F.asc("label"))
+    Scale shape: 2 shuffles per step (adjacency ⨝ labels on nbr, then
+    one groupBy(node, label) count and one groupBy(node) that picks the
+    label as min(struct(-n, label)): highest count, then smallest label),
+    the same iterative equi-join skeleton as PageRank, so AQE skew-split
+    covers hub entities; label payloads are node ids, never grow. The
+    adjacency is cut once (lazily), so every step reads its cached rows.
+    Deep `steps` → pass `checkpoint_every` (the `fixed_rounds` cut;
+    counts + total tie order are partitioning-invariant so the result is
+    bit-identical)."""
+    adj = _adjacency(undirected_edges(edges, src, dst)).localCheckpoint(eager=False)
 
     def step(state, _r):
         (labels,) = state
-        cnt = (
+        return (
             adj.join(labels.withColumnRenamed("node", "nbr"), "nbr")
             .groupBy("node", "label")
             .agg(F.count(F.lit(1)).alias("n"))
-        )
-        return (
-            cnt.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") == 1)
-            .select("node", "label"),
+            .groupBy("node")
+            .agg(F.min(F.struct((-F.col("n")).alias("n"), "label")).alias("best"))
+            .select("node", "best.label"),
         )
 
     labels = graph_nodes(edges, src, dst).withColumn("label", F.col("node"))
@@ -726,37 +743,55 @@ def random_walks(
     duplicated step-0 rows while later steps collapse to one row per
     (walk_id, walk_idx) — an inconsistent corpus.
 
-    Returns (walk_id, walk_idx, step, node) with step 0 = the start.
+    Returns (walk_id, walk_idx, node, step) with step 0 = the start.
 
-    Per hop: one equi-join frontier->edges (frontier is |starts| *
-    walks_per_node rows — broadcast-sized against the edge table) and one
-    (walk, step)-partitioned min — O(steps) shuffles total, the frontier
-    never grows. Walk count, not graph size, bounds driver-visible state
+    Iterated path concatenation: the frontier (one row per walk,
+    |starts| * walks_per_node rows) carries the walk's `path`, and only
+    the last frontier is read, as posexplode(path) — so the plan grows by
+    one hop per step instead of holding every hop's frontier. Per hop:
+    one inner equi-join frontier->edges (the small frontier can stay the
+    broadcast side against the edge table) and one (walk)-partitioned
+    min. A walk at a dead end stays in the frontier through its node's
+    stop row (nbr NULL), one per node a walk can stand on without an
+    out-edge: (starts ∪ dst) minus src; the stop keeps the node and the
+    path. Walk count, not graph size, bounds driver-visible state
     (nothing is collected)."""
-    frontier = (
-        starts.select(F.col("node").alias("walk_id")).distinct()
-        .crossJoin(
-            starts.sparkSession.range(walks_per_node).select(
-                F.col("id").cast("int").alias("walk_idx")
-            )
-        )
-        .select("walk_id", "walk_idx", F.col("walk_id").alias("node"))
+    walkers = starts.select(F.col("node").alias("walk_id")).distinct()
+    e = edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr"))
+    stops = (
+        e.select("node", F.lit(1).alias("o"))
+        .unionByName(e.select(F.col("nbr").alias("node"), F.lit(0).alias("o")))
+        .unionByName(walkers.select(F.col("walk_id").alias("node"), F.lit(0).alias("o")))
+        .groupBy("node")
+        .agg(F.max("o").alias("o"))
+        .filter(F.col("o") == 0)
+        .select("node", F.lit(None).cast(e.schema["nbr"].dataType).alias("nbr"))
     )
-    out = frontier.withColumn("step", F.lit(0))
+    # cut once (lazily): every hop joins the same cached rows, and no hop
+    # plans its own scan of the edges
+    hop = e.unionByName(stops).localCheckpoint(eager=False)
+    frontier = walkers.crossJoin(
+        starts.sparkSession.range(walks_per_node).select(F.col("id").cast("int").alias("walk_idx"))
+    ).select("walk_id", "walk_idx", F.col("walk_id").alias("node"), F.array("walk_id").alias("path"))
     for s in range(1, steps + 1):
-        cand = frontier.join(
-            edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr")), on="node"
-        )
         d = _gdraw(
             F.concat_ws("#", F.col("node"), F.col("nbr"), F.col("walk_idx")),
             f"walk{s}",
             seed,
         )
         w = Window.partitionBy("walk_id", "walk_idx").orderBy(d, F.col("nbr"))
+        moved = F.col("nbr").isNotNull()
         frontier = (
-            cand.withColumn("_rk", F.row_number().over(w))
+            frontier.join(hop, "node")
+            .withColumn("_rk", F.row_number().over(w))
             .filter(F.col("_rk") == 1)
-            .select("walk_id", "walk_idx", F.col("nbr").alias("node"))
+            .select(
+                "walk_id",
+                "walk_idx",
+                F.when(moved, F.col("nbr")).otherwise(F.col("node")).alias("node"),
+                F.when(moved, F.concat("path", F.array("nbr"))).otherwise(F.col("path")).alias("path"),
+            )
         )
-        out = out.unionByName(frontier.withColumn("step", F.lit(s)))
-    return out
+    return frontier.select("walk_id", "walk_idx", F.posexplode("path").alias("step", "node")).select(
+        "walk_id", "walk_idx", "node", "step"
+    )

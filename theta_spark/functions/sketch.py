@@ -199,13 +199,18 @@ def exact_quantiles(
     DISTINCT values, not rows — right for bounded-cardinality profile
     columns like lengths/counts; pre-bucket wider domains first), the
     shared two-phase prefix sum over it (prefix.py — no unpartitioned
-    window), then one broadcast join of the permille list and a
-    (q)-grouped MIN. The quantile list is tiny by definition."""
+    window; the histogram is cut once, so the input is scanned once),
+    then one broadcast join of the permille list and a (q)-grouped MIN.
+    The quantile list is tiny by definition."""
     from theta_spark.prefix import two_phase_cumsum
 
     spark = df.sparkSession
-    hist = df.groupBy(F.col(value_col).cast("long").alias("v")).agg(
-        F.count(F.lit(1)).alias("cnt")
+    # read three times below (the prefix sum's two branches and n_total):
+    # cut once so the input is scanned once
+    hist = (
+        df.groupBy(F.col(value_col).cast("long").alias("v"))
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .localCheckpoint(eager=False)
     )
     cum = two_phase_cumsum(
         hist.withColumn("_bkt", F.floor(F.col("v") / bucket_width).cast("long")),
