@@ -145,12 +145,11 @@ def test_weighted_choice_is_broadcast_hash_join(docs):
         out.explain("formatted")
     p = buf.getvalue()
     assert "BroadcastHashJoin" in p
-    # nested-loop joins are allowed ONLY inside the vocab-index build,
-    # where both sides are the aggregated per-bucket totals (bounded by
-    # the token-prefix alphabet, never by the corpus): the triangular
-    # bkt < bkt prefix-sum join and the 1-row grand-total cross. Any BNLJ
-    # whose condition touches the per-ROW draw/interval columns (u / lo /
-    # hi / bucket) would be the O(rows x vocab) scan this test forbids.
+    # a nested-loop join is allowed ONLY inside the vocab-index build:
+    # the 1-row grand-total cross (its prefix sum is a window over the
+    # per-bucket totals, with no join). Any BNLJ whose condition touches
+    # the per-ROW draw/interval columns (u / lo / hi / bucket) would be
+    # the O(rows x vocab) scan this test forbids.
     for m in re.finditer(r"\(\d+\) BroadcastNestedLoopJoin[^(]*", p):
         section = m.group(0)
         cond = re.search(r"Join condition: ([^\n]*)", section)

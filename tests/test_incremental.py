@@ -557,3 +557,26 @@ def test_each_document_scored_once(spark, v1_v2, tmp_path_factory, monkeypatch):
     scoring_calls.clear()
     run_pipeline(spark, c1, w1)  # resume: every stage is already committed
     assert scoring_calls == []
+
+
+def test_refresh_job_count_is_bounded(spark, tmp_path_factory):
+    """A small-corpus refresh runs at most 58 Spark jobs: the most it ran
+    over 5 runs while Increment read its current keys only from the
+    corpus, so taking the key set as an input costs the batch path no
+    job. Jobs are counted as the new job ids outside any job group (the
+    commit threads do not inherit one)."""
+    docs = generate_corpus(24, seed=5)
+    v1 = corpus_rows(docs[:20])
+    v2 = [
+        r if i % 5 else (r[0], r[1], r[2], r[3], r[4] + "\n# edit\n")
+        for i, r in enumerate(v1)
+        if i != 3
+    ] + corpus_rows(docs[20:])
+    w1 = str(tmp_path_factory.mktemp("jobs_v1"))
+    w2 = str(tmp_path_factory.mktemp("jobs_v2"))
+    run_pipeline(spark, spark.createDataFrame(v1, CORPUS_SCHEMA), w1)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    run_pipeline_incremental(spark, spark.createDataFrame(v2, CORPUS_SCHEMA), w2, prior_workdir=w1)
+    jobs = set(tracker.getJobIdsForGroup(None)) - before
+    assert len(jobs) <= 58, len(jobs)

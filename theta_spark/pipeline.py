@@ -497,7 +497,9 @@ def read_stage(spark: SparkSession, workdir: str, stage: str) -> DataFrame:
     # the key table's schema is fixed: given, it spares a schema-inference
     # job per chain link
     retired = spark.read.schema("doc_id STRING").parquet(os.path.join(workdir, stage, "_retired"))
-    return base.join(retired, "doc_id", "left_anti").unionByName(local)
+    # the join moves doc_id first; the resolved view keeps the snapshot's
+    # column order
+    return base.join(retired, "doc_id", "left_anti").select(*local.columns).unionByName(local)
 
 
 def stage_lineage(spark: SparkSession, workdir: str, stage: str) -> DataFrame:
@@ -666,9 +668,15 @@ class Increment:
     document is changed when its set of content keys differs from the
     prior run's (_doc_changes). Each input below is materialized at most
     once, when the first builder that needs it runs, so a resumed run
-    whose stages are all committed scores and scans nothing."""
+    whose stages are all committed scores and scans nothing.
 
-    def __init__(self, spark, corpus, workdir, prior, cfg, resume):
+    `arrivals` says `corpus` holds only the documents that arrived since
+    the prior (a stream epoch, streaming.ingest): a doc_id that did not
+    arrive is then unchanged, not deleted. The run's current (doc_id,
+    sha256) key set `keys` is the corpus's keys, plus — for arrivals —
+    the prior registry's keys of every doc_id that did not arrive."""
+
+    def __init__(self, spark, corpus, workdir, prior, cfg, resume, arrivals=False):
         self.spark, self.workdir, self.prior, self.cfg, self.resume = (
             spark, workdir, prior, cfg, resume,
         )
@@ -684,6 +692,10 @@ class Increment:
         self.registry = None
         if prior is not None and stage_complete(prior, "scored_docs"):
             self.registry = read_stage(spark, prior, "scored_docs")
+        self.keys = self.docs.select("doc_id", "sha256")
+        if arrivals and self.registry is not None:
+            kept = self.registry.join(self.keys.select("doc_id"), "doc_id", "left_anti")
+            self.keys = self.keys.unionByName(kept)
         # per-doc key counts against the prior, aggregated once: the
         # change table and delta_stats both derive from them — from
         # parallel commit threads — and each lazy re-scan would re-read
@@ -691,9 +703,7 @@ class Increment:
         # against a prior with no registry does commit_scored_docs hash
         # the corpus once more, for its self-contained key snapshot.)
         self.sides = _once(
-            lambda: _doc_key_sides(
-                self.docs.select("doc_id", "sha256"), self._prior_keys()
-            ).localCheckpoint(eager=True)
+            lambda: _doc_key_sides(self.keys, self._prior_keys()).localCheckpoint(eager=True)
         )
         self.scored = _once(self._score)
         # the row stages, committed once each: the graph-layer batch runs
@@ -749,7 +759,7 @@ class Increment:
         if self.prior is not None and self.registry is None:
             return run_checkpointed(
                 self.spark, self.workdir, "scored_docs",
-                lambda: self.docs.select("doc_id", "sha256").distinct(),
+                lambda: self.keys.distinct(),
                 resume=self.resume,
             )
         return run_checkpointed_delta(

@@ -10,11 +10,11 @@ bit-identical to it:
    .orderBy(order)`, where the bucket is a PREFIX of the sort key
    (bucket ranges are contiguous in the global order, so (bucket,
    order) ordering == global ordering);
-2. per-bucket offsets — total value of all strictly-smaller buckets via
-   a triangular self-join over the per-bucket totals (no window at
-   all). The totals side is one row per bucket and does not grow with
-   the input; pick the bucketing so |buckets| stays modest, or recurse
-   the same two phases over the totals at 10^9+ buckets.
+2. per-bucket offsets — total value of all strictly-smaller buckets, a
+   running sum over the per-bucket totals in bucket order. That window
+   has one partition, but its input is one row per bucket and does not
+   grow with the input; pick the bucketing so |buckets| stays modest, or
+   recurse the same two phases over the totals at 10^9+ buckets.
 
 Integer values stay integer until whatever division the caller does, so
 the result is bit-identical to the naive single-window formula
@@ -43,12 +43,12 @@ def two_phase_cumsum(
         "_cum_in",
         F.sum(value_col).over(w_in.rowsBetween(Window.unboundedPreceding, 0)),
     )
-    totals = df.groupBy(bucket_col).agg(F.sum(value_col).alias("_bt"))
-    offs = (
-        totals.alias("a")
-        .join(totals.alias("b"), F.col(f"b.{bucket_col}") < F.col(f"a.{bucket_col}"), "left")
-        .groupBy(F.col(f"a.{bucket_col}").alias(bucket_col))
-        .agg(F.coalesce(F.sum("b._bt"), F.lit(0)).alias("_off"))
+    # one partition on purpose: its input is the totals, one row per bucket
+    below = Window.partitionBy(F.lit(0)).orderBy(bucket_col).rowsBetween(
+        Window.unboundedPreceding, -1
+    )
+    offs = df.groupBy(bucket_col).agg(F.sum(value_col).alias("_bt")).select(
+        bucket_col, F.coalesce(F.sum("_bt").over(below), F.lit(0)).alias("_off")
     )
     return (
         d.join(F.broadcast(offs), bucket_col)

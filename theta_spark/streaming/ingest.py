@@ -1,351 +1,173 @@
-"""Streaming incremental KG ingest — the streaming twin of
-`pipeline.run_pipeline_incremental`.
+"""Streaming incremental KG ingest: each epoch of a corpus stream is a
+pipeline refresh against the previous epoch.
 
 A corpus stream (commit firehose: repo/path/commit/lang/content rows,
-the input_hint shape) is ingested epoch by epoch under foreachBatch;
-each epoch scores ONLY docs whose (doc_id, sha256) content key has not
-been scored by an earlier epoch — unchanged re-arrivals cost one
-key-only anti-join, never an Arrow scoring pass. A changed doc (same
-doc_id, new sha256) is re-scored and its new rows SUPERSEDE the old
-ones at read time (keep-latest-epoch per doc_id — compaction-on-read;
-on a cluster the same contract is an Iceberg MERGE INTO, here it is the
-parquet-fallback twin of pipeline.py's snapshot layout).
+the input_hint shape) is ingested epoch by epoch under foreachBatch.
+Epoch <id> is a pipeline workdir, `out_dir/epoch=<id>`: it commits the
+doc-keyed stages `mentions`, `triples` and the `scored_docs` registry
+(plus `delta_stats` against a prior) through the same `Increment` and
+`run_checkpointed_delta` calls a batch refresh uses, so every epoch has
+the snapshot layout `run_pipeline` resumes from and `read_stage` on the
+latest epoch is the stream's resolved view. The prior of an epoch is the
+latest epoch below it whose stages all have manifests.
 
-Exactly-once: every per-epoch output (mentions / triples / scored_docs)
-is an `epoch=<id>` directory written with OVERWRITE, and the delta is
-computed against epochs STRICTLY BELOW the current one — so a crash-
-replayed epoch sees the same prior registry, recomputes the same delta,
-and overwrites its own directories with identical rows (idempotent;
-verified in tests/test_streaming_ingest.py).
+An arrival replaces every prior version of its doc_id; a doc_id that did
+not arrive keeps its rows. So an epoch's current key set is its arrivals'
+(doc_id, sha256) keys plus the prior registry's keys of every doc_id that
+did not arrive, and `Increment` derives the change from it exactly as for
+a batch refresh: a new, changed or reverted doc is scored, an unchanged
+re-arrival costs a key comparison, and nothing is deleted.
 
-Scale shape: the registry is two short string columns per doc (tiny);
-the anti-join shuffles keys only; scoring is delta-proportional; the
-keep-latest resolution is one window over doc_id — all operations
-partition horizontally. State lives in the table layout, not executor
-memory, and `compact_epochs` periodically folds old epochs into an
-O(1)-directory base snapshot, so registry reads stay bounded no matter
-how long the stream runs.
+Exactly-once: manifests are the commit markers. A crash-replayed epoch
+sees the same prior, so it resumes its committed stages and recomputes
+the others from the same delta; a replay of an epoch whose stages are
+all committed reads nothing and only finishes its retention.
+
+Retention: a chained stage is flattened into a self-contained snapshot
+once its chain reaches `cfg.delta_max_chain`; once every chained stage
+of an epoch is self-contained, the epochs below it are deleted, so a
+stream that runs for ever keeps O(delta_max_chain) epoch directories.
+They are deleted newest first, so a crash part-way leaves only epochs
+whose whole chain is still on disk.
+
+Path contract: `out_dir` is a path the driver can open — epochs are
+listed, manifests written and old epochs deleted by the driver, as for a
+pipeline workdir. A stream written in the older per-stage layout
+(`out_dir/<stage>/epoch=<id>`) is refused: re-ingest it into a new
+`out_dir`.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from theta_spark.config import PipelineConfig
-from theta_spark.pipeline import doc_mentions, doc_triples, extract_docs, with_doc_id
+from theta_spark.functions.sketch import hll_estimate_from_registers, hll_registers
+from theta_spark.pipeline import (
+    Increment,
+    _commit_graph_layer,
+    read_stage,
+    run_checkpointed,
+    run_stages_parallel,
+    stage_complete,
+    stage_manifest,
+)
 
-STAGES = ("mentions", "triples", "scored_docs")
-HLL_B = 8  # stream-cardinality sketch precision (m=256 registers/epoch)
-
-# Expected stage schemas (epoch is the partition-dir column). Used as the
-# read fallback when every epoch so far yielded zero rows for a stage —
-# the dirs then hold only _SUCCESS markers and schema inference fails,
-# unlike the batch pipeline whose manifests record the schema (ADVICE r4).
-STAGE_SCHEMAS = {
-    "mentions": (
-        "doc_id string, sha256 string, category_id int, start int, end int, "
-        "mention string, indent int, category string, norm string, epoch int"
-    ),
-    "triples": "subj string, pred string, obj string, doc_id string, sha256 string, epoch int",
-    "scored_docs": "doc_id string, sha256 string, epoch int",
-}
-
-
-def _read_stage_parquet(spark: SparkSession, out_dir: str, stage: str) -> DataFrame:
-    """Read a stage across its epoch dirs; when inference fails because no
-    epoch has written a data file yet (all-zero-yield corpus), read with
-    the declared schema instead of erroring."""
-    from pyspark.errors import AnalysisException
-
-    path = f"{out_dir}/{stage}"
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as exc:
-        if "UNABLE_TO_INFER_SCHEMA" not in str(exc) and "infer schema" not in str(exc).lower():
-            raise
-        return spark.read.schema(STAGE_SCHEMAS[stage]).parquet(path)
+HLL_B = 8  # stream-cardinality sketch precision (m=256 registers)
+# the doc-keyed stages whose delta chains reach back to earlier epochs
+CHAINED = ("mentions", "triples", "scored_docs")
+# the stages every epoch commits: their manifests mark the epoch committed
+COMMITTED = CHAINED + ("hll_versions",)
 
 
-def _fs_for(spark: SparkSession, path_str: str):
-    """(Hadoop FileSystem, Path) for any URI the cluster can reach —
-    file:, hdfs:, s3a:, ... A bare local path resolves against the
-    default FS exactly as Spark's own readers do."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path_str)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+def _epoch_dir(out_dir: str, epoch_id: int) -> str:
+    return os.path.join(out_dir, f"epoch={epoch_id}")
 
 
-def _registry_epoch_dirs(
-    spark: SparkSession, out_dir: str, stage: str = "scored_docs"
-) -> list[str]:
-    """The stage's epoch=<id> directories (empty list when the stage does
-    not exist yet). Listing explicitly — rather than catching a broad read
-    exception — keeps 'first epoch' distinct from 'registry unreadable'
-    (ADVICE r4: a corrupt/unreadable registry must PROPAGATE, not silently
-    degrade into a score-everything epoch that masks the real error).
-    Listed through the Hadoop FileSystem API, NOT os.listdir, so the
-    module keeps working when out_dir is hdfs://... or s3a://... (an
-    os-based listing would read every remote registry as absent and
-    silently re-score the full corpus each epoch — review r5)."""
-    fs, root = _fs_for(spark, os.path.join(out_dir, stage))
-    if not fs.exists(root):
+def _epoch_ids(out_dir: str) -> list[int]:
+    if not os.path.isdir(out_dir):
         return []
-    return sorted(
-        st.getPath().getName()
-        for st in fs.listStatus(root)
-        if st.isDirectory() and st.getPath().getName().startswith("epoch=")
-    )
+    return sorted(int(d.split("=", 1)[1]) for d in os.listdir(out_dir) if d.startswith("epoch="))
 
 
-def _prior_registry(spark: SparkSession, out_dir: str, epoch_id: int) -> DataFrame | None:
-    """(doc_id, sha256) scored by epochs < epoch_id, or None on the first
-    epoch. Reading strictly-below epochs is what makes a crash-replayed
-    epoch recompute the SAME delta it computed the first time."""
-    if not _registry_epoch_dirs(spark, out_dir):
-        return None  # first epoch: no registry yet
-    reg = _read_stage_parquet(spark, out_dir, "scored_docs")
-    return reg.where(F.col("epoch") < F.lit(epoch_id)).select("doc_id", "sha256")
+def latest_epoch(out_dir: str, below: int | None = None) -> str | None:
+    """Workdir of the latest committed epoch (below `below`, when given),
+    or None when there is none."""
+    for e in reversed(_epoch_ids(out_dir)):
+        if below is not None and e >= below:
+            continue
+        if all(stage_complete(_epoch_dir(out_dir, e), s) for s in COMMITTED):
+            return _epoch_dir(out_dir, e)
+    return None
 
 
-def process_corpus_batch_incremental(
+def process_corpus_batch(
     batch_df: DataFrame, out_dir: str, epoch_id: int, cfg: PipelineConfig | None = None
 ) -> None:
-    """foreachBatch body: score the epoch's NEW/CHANGED docs only.
+    """foreachBatch body: refresh the previous epoch with this epoch's
+    arrivals, committing into `out_dir/epoch=<epoch_id>`. Besides the
+    pipeline's doc-keyed stages, the epoch commits `hll_versions`: HLL
+    registers over every content version the stream has scored, the
+    prior epoch's registers max-merged with this epoch's."""
+    cfg = cfg or PipelineConfig()
+    if any(os.path.isdir(os.path.join(out_dir, s)) for s in CHAINED):
+        raise ValueError(
+            f"{out_dir} holds a stream in the old per-stage layout "
+            "(<stage>/epoch=<id>); re-ingest the corpus into a new out_dir"
+        )
+    workdir = _epoch_dir(out_dir, epoch_id)
+    prior = latest_epoch(out_dir, below=epoch_id)
+    # a replay of a committed epoch reads nothing below it: a crash during
+    # retention may have deleted part of its prior's chain
+    committed = all(stage_complete(workdir, s) for s in COMMITTED) and (
+        prior is None or stage_complete(workdir, "delta_stats")
+    )
+    if not committed:
+        _refresh(batch_df, workdir, prior, cfg)
+    if not any(stage_manifest(workdir, s).get("delta_base") for s in CHAINED):
+        # every stage of this epoch is self-contained: nothing reads the
+        # epochs below it any more. Newest first: delta chains point only
+        # downward, so every epoch a crash here leaves behind still resolves.
+        for e in reversed(_epoch_ids(out_dir)):
+            if e < epoch_id:
+                shutil.rmtree(_epoch_dir(out_dir, e))
 
-    Writes (all epoch-keyed OVERWRITE — idempotent under replay):
-      out_dir/mentions/epoch=<id>     rows for this epoch's delta docs
-      out_dir/triples/epoch=<id>
-      out_dir/scored_docs/epoch=<id>  every (doc_id, sha256) this epoch
-                                      scored — INCLUDING zero-yield docs,
-                                      the registry row-bearing stages
-                                      cannot witness (same reasoning as
-                                      pipeline.py's scored_docs stage).
-    """
+
+def _refresh(batch_df: DataFrame, workdir: str, prior: str | None, cfg: PipelineConfig) -> None:
     spark = batch_df.sparkSession
-    docs = with_doc_id(batch_df)
-    prior = _prior_registry(spark, out_dir, epoch_id)
+    inc = Increment(spark, batch_df, workdir, prior, cfg, True, arrivals=True)
+
+    def hll():
+        # max-merge is idempotent: a re-scored old version cannot move it
+        regs = hll_registers(
+            inc.scored().select(F.concat_ws("|", "doc_id", "sha256").alias("vkey")),
+            "vkey",
+            b=HLL_B,
+        )
+        if prior is not None:
+            regs = regs.unionByName(read_stage(spark, prior, "hll_versions"))
+        return regs.groupBy("idx").agg(F.max("mx").alias("mx"))
+
+    commits = {
+        "mentions": inc.mentions,
+        "triples": inc.triples,
+        "scored_docs": inc.commit_scored_docs,
+        "hll_versions": lambda: run_checkpointed(spark, workdir, "hll_versions", hll),
+    }
     if prior is not None:
-        docs = docs.join(prior, ["doc_id", "sha256"], "left_anti")
-    # one materialization: the delta docs are scored once, and mentions,
-    # triples and the registry are all projections of that per-doc frame
-    scored = extract_docs(docs, cfg).localCheckpoint(eager=True)
-    doc_mentions(scored).write.mode("overwrite").parquet(f"{out_dir}/mentions/epoch={epoch_id}")
-    doc_triples(scored).write.mode("overwrite").parquet(f"{out_dir}/triples/epoch={epoch_id}")
-    keyed = scored.select("doc_id", "sha256").distinct()
-    keyed.write.mode("overwrite").parquet(f"{out_dir}/scored_docs/epoch={epoch_id}")
-    # stream-cardinality sketch: HLL registers over this epoch's NEW
-    # content versions — O(2^b) rows per epoch, max-merged at read time
-    # (read_stream_cardinality). Max-merge is idempotent, so a crash-
-    # replayed epoch overwriting its registers cannot move the estimate.
-    from theta_spark.functions.sketch import hll_registers
-
-    hll_registers(
-        keyed.select(F.concat_ws("|", "doc_id", "sha256").alias("vkey")),
-        "vkey",
-        b=HLL_B,
-    ).write.mode("overwrite").parquet(f"{out_dir}/hll_versions/epoch={epoch_id}")
+        commits["delta_stats"] = inc.commit_delta_stats
+    run_stages_parallel(commits)
 
 
-def attach_stream_incremental(
+def attach_stream(
     corpus_stream: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
     cfg: PipelineConfig | None = None,
 ):
-    """corpus readStream -> writeStream.foreachBatch(incremental ingest).
-    Returns the StreamingQuery; exactly-once = streaming checkpoint
-    (epoch replay) + the idempotent strictly-below-epoch delta above."""
+    """corpus readStream -> writeStream.foreachBatch(process_corpus_batch).
+    Returns the StreamingQuery (the caller awaits or stops it).
+    Exactly-once = streaming checkpoint (epoch replay on recovery) + the
+    manifest-committed epoch workdirs."""
     return (
         corpus_stream.writeStream.option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            lambda df, epoch: process_corpus_batch_incremental(df, out_dir, epoch, cfg)
-        )
+        .foreachBatch(lambda df, epoch: process_corpus_batch(df, out_dir, epoch, cfg))
         .trigger(availableNow=True)
         .start()
     )
 
 
-def read_resolved_stage(spark: SparkSession, out_dir: str, stage: str) -> DataFrame:
-    """Keep-latest-epoch resolution: a doc re-scored in a later epoch
-    (content changed) supersedes its earlier rows. One window max over
-    doc_id — the parquet-fallback twin of an Iceberg MERGE; `epoch` is
-    dropped from the result so downstream consumers see the same schema
-    the batch pipeline produces.
-
-    Zero-yield semantics: the max epoch is taken from the scored_docs
-    REGISTRY, not from the stage's own rows — a doc whose latest version
-    legitimately yields nothing would otherwise resurrect its stale rows
-    (the registry always witnesses the re-score; row-bearing stages
-    cannot)."""
-    df = _read_stage_parquet(spark, out_dir, stage)
-    if stage == "scored_docs":
-        w = Window.partitionBy("doc_id")
-        return (
-            df.withColumn("_mx", F.max("epoch").over(w))
-            .where(F.col("epoch") == F.col("_mx"))
-            .drop("_mx", "epoch")
-        )
-    latest = (
-        _read_stage_parquet(spark, out_dir, "scored_docs")
-        .groupBy("doc_id")
-        .agg(F.max("epoch").alias("epoch"))
-    )
-    return df.join(latest, ["doc_id", "epoch"], "left_semi").drop("epoch")
-
-
 def read_stream_cardinality(spark: SparkSession, out_dir: str, b: int = HLL_B) -> DataFrame:
-    """Merged HLL estimate of the DISTINCT CONTENT VERSIONS (doc_id,
-    sha256) the stream has ever ingested — every epoch's O(2^b) register
-    rows max-merged into one estimate (m, v_empty, s_scaled, est). The
-    stream-health metric ("how many versions have we seen?") answered
-    without scanning the registry: register reads are O(epochs · 2^b)
-    rows, and after `compact_epochs` O(2^b). Bit-equal to the batch
-    `hll_estimate` over the full registry pair set (test-pinned);
-    duplicate register rows from crash replays cannot move it (max is
-    idempotent)."""
-    from pyspark.errors import AnalysisException
-
-    from theta_spark.functions.sketch import hll_estimate_from_registers
-
-    path = f"{out_dir}/hll_versions"
-    try:
-        regs = spark.read.parquet(path)
-    except AnalysisException as exc:
-        if "UNABLE_TO_INFER_SCHEMA" not in str(exc) and "infer schema" not in str(exc).lower():
-            raise
-        regs = spark.read.schema("idx long, mx long").parquet(path)
-    return hll_estimate_from_registers(regs.select("idx", "mx"), (), b)
-
-
-def compact_epochs(spark: SparkSession, out_dir: str, floor: int) -> dict:
-    """Fold every epoch STRICTLY BELOW `floor` into an O(1)-directory base
-    snapshot, so `_prior_registry` and `read_resolved_stage` list a bounded
-    number of directories no matter how long the stream has run (VERDICT r4
-    "What's wrong" #4: per-epoch anti-join cost grew with epoch count —
-    this is the parquet-fallback twin of an Iceberg snapshot-expire +
-    rewrite_data_files maintenance pass).
-
-    Base layout after compaction (B = floor-1):
-      scored_docs/epoch=B      the LATEST (doc_id, sha256) pair per doc —
-                               what keep-latest resolution must return;
-      scored_docs/epoch=B-1    every OTHER distinct pair ever scored below
-                               floor — the anti-join registry needs the
-                               full pair set (a doc reverted to an old
-                               content hash must NOT be re-scored, exactly
-                               as before compaction), but those pairs must
-                               not win per-doc max-epoch resolution;
-      mentions|triples/epoch=B each doc's rows from its latest below-floor
-                               epoch (superseded rows are dead weight: no
-                               reader can reach them).
-
-    Invariants preserved EXACTLY (pinned in tests/test_streaming_ingest.py):
-    the (doc_id, sha256) registry set, resolved reads of every stage, and
-    the delta any epoch >= floor computes (base epochs B-1, B < floor <=
-    epoch_id, so strictly-below filters see the same pair set).
-
-    Crash safety: compacted frames are first written to a DURABLE temp
-    dir beside the stages (the same discipline as
-    pipeline.rewrite_stage_full — NOT a localCheckpoint, whose blocks
-    die with the process/executor and would leave the overwritten input
-    dirs unrecoverable; review r5), and the epoch=B / B-1 slots (which
-    are also read inputs) are rewritten only from that durable copy. A
-    crash before the final writes leaves the originals intact (orphan
-    temps are overwritten on re-run); a crash between the writes and the
-    deletes leaves duplicate rows in the old dirs, which both consumers
-    tolerate (the registry anti-join is pair-distinct; resolution takes
-    per-doc max epoch) and a re-run converges to the same base. Epochs
-    >= floor are never touched."""
-    if floor < 2:
-        raise ValueError("compaction needs two base slots: floor must be >= 2")
-    base, hist = floor - 1, floor - 2
-
-    tmp_root = f"{out_dir}/__compact_tmp"
-
-    def _durable(df, name):
-        """Materialize to durable parquet under the temp root; hand back a
-        reader pinned to the frame's schema (an empty frame writes only
-        _SUCCESS — inference would fail)."""
-        path = f"{tmp_root}/{name}"
-        schema = df.schema
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.schema(schema).parquet(path)
-
-    reg = (
-        _read_stage_parquet(spark, out_dir, "scored_docs")
-        .where(F.col("epoch") < F.lit(floor))
-    )
-    w = Window.partitionBy("doc_id")
-    latest = (
-        reg.withColumn("_mx", F.max("epoch").over(w))
-        .where(F.col("epoch") == F.col("_mx"))
-        .select("doc_id", "sha256")
-        .distinct()
-    )
-    latest = _durable(latest, "latest")
-    hist_pairs = _durable(
-        reg.select("doc_id", "sha256")
-        .distinct()
-        .join(latest, ["doc_id", "sha256"], "left_anti"),
-        "hist_pairs",
-    )
-    latest_epochs = reg.groupBy("doc_id").agg(F.max("epoch").alias("epoch"))
-
-    kept_rows = {}
-    for stage in ("mentions", "triples"):
-        rows = (
-            _read_stage_parquet(spark, out_dir, stage)
-            .where(F.col("epoch") < F.lit(floor))
-            .join(latest_epochs, ["doc_id", "epoch"], "left_semi")
-            .drop("epoch")
-        )
-        kept_rows[stage] = _durable(rows, f"kept_{stage}")
-
-    # HLL registers fold by max-merge: one epoch=base register table
-    # replaces all below-floor epochs (registers are a union sketch —
-    # merging loses nothing, and duplicates from a crash between the
-    # write and the deletes below are absorbed by the read-time max)
-    hll_base = None
-    _hll_fs, _hll_root = _fs_for(spark, os.path.join(out_dir, "hll_versions"))
-    if _hll_fs.exists(_hll_root):
-        hll_base = (
-            spark.read.parquet(f"{out_dir}/hll_versions")
-            .where(F.col("epoch") < F.lit(floor))
-            .groupBy("idx")
-            .agg(F.max("mx").alias("mx"))
-        )
-        hll_base = _durable(hll_base, "hll_base")
-
-    # all reads are materialized; now rewrite the base and drop old dirs
-    latest.write.mode("overwrite").parquet(f"{out_dir}/scored_docs/epoch={base}")
-    hist_pairs.write.mode("overwrite").parquet(f"{out_dir}/scored_docs/epoch={hist}")
-    for stage in ("mentions", "triples"):
-        kept_rows[stage].write.mode("overwrite").parquet(f"{out_dir}/{stage}/epoch={base}")
-    if hll_base is not None:
-        hll_base.write.mode("overwrite").parquet(f"{out_dir}/hll_versions/epoch={base}")
-
-    removed = 0
-    sweep = STAGES + (("hll_versions",) if hll_base is not None else ())
-    for stage in sweep:
-        keep = {f"epoch={base}"} | ({f"epoch={hist}"} if stage == "scored_docs" else set())
-        fs, root = _fs_for(spark, os.path.join(out_dir, stage))
-        for d in _registry_epoch_dirs(spark, out_dir, stage):
-            if d not in keep and int(d.split("=", 1)[1]) < floor:
-                fs.delete(spark._jvm.org.apache.hadoop.fs.Path(root, d), True)
-                removed += 1
-    stats = {
-        "floor": floor,
-        "base_epoch": base,
-        "hist_epoch": hist,
-        "removed_dirs": removed,
-        "latest_pairs": latest.count(),
-        "hist_pairs": hist_pairs.count(),
-    }
-    tmp_fs, tmp_path = _fs_for(spark, tmp_root)
-    tmp_fs.delete(tmp_path, True)
-    return stats
+    """HLL estimate (m, v_empty, s_scaled, est) of the distinct content
+    versions (doc_id, sha256) the stream has ever ingested, from the
+    latest epoch's O(2^b) cumulative registers — bit-equal to the batch
+    `hll_estimate` over those versions (test-pinned)."""
+    regs = read_stage(spark, latest_epoch(out_dir), "hll_versions")
+    return hll_estimate_from_registers(regs, (), b)
 
 
 def finalize_graph(
@@ -355,18 +177,15 @@ def finalize_graph(
     cfg: PipelineConfig | None = None,
 ) -> dict:
     """Materialize the graph layer (nodes / edge_provenance / edges) from
-    the stream's resolved mentions + triples, via the SAME checkpointed
-    commit path the batch pipeline uses (pipeline._commit_graph_layer:
-    concurrent independent commits, partitioned tables, 1-action
-    lineage). Entity canonicalization is corpus-global, so the graph is a
-    periodic batch finalize over the accumulated stream — the standard
-    lambda-handoff — not a per-epoch rebuild."""
-    from theta_spark.pipeline import _commit_graph_layer
-
-    cfg = cfg or PipelineConfig()
-    mentions = read_resolved_stage(spark, out_dir, "mentions")
-    triples = read_resolved_stage(spark, out_dir, "triples")
+    the latest epoch's mentions + triples, via the SAME commit path the
+    batch pipeline uses (pipeline._commit_graph_layer). Entity
+    canonicalization is corpus-global, so the graph is a periodic batch
+    finalize over the accumulated stream, not a per-epoch rebuild."""
+    latest = latest_epoch(out_dir)
+    mentions = read_stage(spark, latest, "mentions")
+    triples = read_stage(spark, latest, "triples")
     graph = _commit_graph_layer(
-        spark, graph_dir, lambda: triples, lambda: mentions, cfg, resume=False
+        spark, graph_dir, lambda: triples, lambda: mentions, cfg or PipelineConfig(),
+        resume=False,
     )
     return {"mentions": mentions, "triples": triples, **graph}
